@@ -5,7 +5,8 @@ The reference engine validates one document at a time
 uniqueness, referential integrity, column statistics, or distribution
 drift.  These operators add them Spark-first:
 
-* uniqueness        — salted two-stage groupBy (hot-key skew defused)
+* uniqueness        — one partial-aggregated groupBy (hot-key skew
+                      bounded by map-side partial aggregation)
 * referential       — broadcast (or AQE-chosen) LEFT ANTI join
 * ordering          — per-partition window (lag) monotonicity check
 * column stats      — one aggregation pass: null rate, HLL distinct,
@@ -45,35 +46,13 @@ def _violation_struct(code_def: E.ErrorDefinition, doc_path: Column, schema_path
     )
 
 
-def salted_counts(df: DataFrame, keys: list[str], n_salt: int = 16) -> DataFrame:
-    """Two-stage count per key: stage 1 aggregates (keys, salt) so a hot
-    key's rows spread over ``n_salt`` reducers; stage 2 merges the
-    partials.  Returns (keys..., n).
-
-    NOTE: for a COUNT this is strictly more work than ``key_counts``
-    below — Spark's map-side partial aggregation already collapses each
-    map task's rows to ONE partial row per key, so the reducer for even
-    a pathological hot key receives at most #map-tasks rows, while the
-    salted form pays a SECOND full exchange of the (keys, salt) partials
-    to merge them (measured 2 shuffles of ~N rows vs 1 at 6M keys).
-    Kept for aggregations without reductive partial aggregation
-    (collect_list/set) where salting is the real skew bound."""
-    salt = F.pmod(F.spark_partition_id() + F.monotonically_increasing_id(), F.lit(n_salt))
-    stage1 = (
-        df.select(*keys, salt.alias("_salt"))
-        .groupBy(*keys, "_salt")
-        .agg(F.count(F.lit(1)).alias("_partial"))
-    )
-    return stage1.groupBy(*keys).agg(F.sum("_partial").alias("n"))
-
-
 def key_counts(df: DataFrame, keys: list[str]) -> DataFrame:
     """Count per key as one partial-aggregated exchange: each map task
     emits one partial row per key it saw (hash agg before the shuffle),
     so reducer fan-in is bounded at #map-tasks rows per key — the skew
-    bound salting buys, without salting's second full exchange of the
-    partials (guide §2: shuffle fewer bytes via map-side aggregation).
-    Returns (keys..., n) — value-identical to ``salted_counts``."""
+    bound a salted two-stage count would buy, without its second full
+    exchange of the partials (guide §2: shuffle fewer bytes via
+    map-side aggregation).  Returns (keys..., n)."""
     return df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
 
 
@@ -82,7 +61,7 @@ def key_counts(df: DataFrame, keys: list[str]) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def uniqueness_violations(df: DataFrame, keys: list[str], n_salt: int = 16) -> DataFrame:
+def uniqueness_violations(df: DataFrame, keys: list[str]) -> DataFrame:
     """One violation row per row participating in a duplicated key.
 
     NOT_UNIQUE (0x101).  Returns (keys..., + violation fields).
@@ -92,10 +71,8 @@ def uniqueness_violations(df: DataFrame, keys: list[str], n_salt: int = 16) -> D
     OOM the driver.  AQE picks broadcast-hash from runtime stats when
     the dup set is actually small, sort-merge otherwise.
 
-    ``n_salt`` is retained for API compatibility but unused: the count
-    rides map-side partial aggregation (see ``key_counts`` — reducer
-    fan-in is bounded at #map-tasks partial rows per key), which makes
-    the salted form's second full exchange pure overhead."""
+    The count rides map-side partial aggregation (``key_counts`` —
+    reducer fan-in is bounded at #map-tasks partial rows per key)."""
     dupes = key_counts(df, keys).filter(F.col("n") > 1)
     joined = df.select(*keys).join(dupes, keys, "inner")
     key_json = F.to_json(F.struct(*[F.col(k) for k in keys]))
@@ -110,11 +87,9 @@ def uniqueness_violations(df: DataFrame, keys: list[str], n_salt: int = 16) -> D
     return joined.select(*keys, v.alias("v")).select(*keys, "v.*")
 
 
-def distinct_violating_keys(df: DataFrame, keys: list[str], n_salt: int = 16) -> DataFrame:
+def distinct_violating_keys(df: DataFrame, keys: list[str]) -> DataFrame:
     """(keys..., n) for keys appearing more than once — the compact
-    form.  ``n_salt`` retained for API compatibility (see
-    ``uniqueness_violations``); the count is one partial-aggregated
-    exchange."""
+    form; the count is one partial-aggregated exchange."""
     return key_counts(df, keys).filter(F.col("n") > 1)
 
 

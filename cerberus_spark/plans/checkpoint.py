@@ -15,16 +15,27 @@ changed input invalidates the old rows by construction (lineage
 mismatch), which is exactly the reference's schema-hash cache idea
 (validator.py:136-140, utils.py:57-84) promoted to a durable table.
 
-Storage is a parquet append-dir here (works against any filesystem);
-swap to an Iceberg table transparently when its catalog is configured.
+Storage is a parquet append-dir (works against any filesystem).
 All existence probes go through the Hadoop FileSystem API — os.path
 would silently return False for s3a://, hdfs://, abfs:// paths and
 quietly degrade resume to a full re-run.
+
+Small artifacts (checkpoint rows, per-partition summaries, one-row
+meta rows) are read and written driver-side with pyarrow when their
+filesystem is ``file:`` — a Spark job around a few KB costs ~0.1-0.8 s
+of pure scheduling — and through Spark everywhere else.
+``_local_dir`` is the one place that picks the branch; every helper
+below owns both branches, so callers never carry a fallback.
 """
 
 from __future__ import annotations
 
+import glob
 import hashlib
+import os
+import re
+import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -44,8 +55,6 @@ def one_row_df(spark: SparkSession, schema: str, values):
     this sandbox.  Scalar columns only (int/long/double/string/
     boolean); the cast pins each column to exactly the type the schema
     string names, so readers see the identical parquet schema."""
-    from pyspark.sql import functions as F
-
     cols = []
     for spec, v in zip(schema.split(","), values):
         name, typ = spec.strip().split(None, 1)
@@ -53,135 +62,137 @@ def one_row_df(spark: SparkSession, schema: str, values):
     return spark.range(1).select(*cols)
 
 
+def _fs(spark: SparkSession, path: str):
+    """The Hadoop ``(FileSystem, Path)`` pair bound to ``path``'s
+    scheme."""
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return fs, hpath
+
+
+def _local_dir(spark: SparkSession, path: str) -> str | None:
+    """The os-level path when ``path``'s filesystem is ``file:``, else
+    None — the single decision point between the driver-side pyarrow
+    branch and the Spark branch of every helper in this module."""
+    fs, _ = _fs(spark, path)
+    if fs.getUri().getScheme() != "file":
+        return None
+    return re.sub(r"^file:(//)?", "", path)
+
+
+def _arrow_fields(schema: str) -> list[tuple]:
+    """``(name, pyarrow type)`` per column of a DDL ``schema`` string;
+    the type is None for DDL types outside the scalar set below."""
+    import pyarrow as pa
+
+    types = {"int": pa.int32(), "integer": pa.int32(),
+             "bigint": pa.int64(), "long": pa.int64(),
+             "double": pa.float64(), "float": pa.float32(),
+             "string": pa.string(), "boolean": pa.bool_(),
+             "timestamp": pa.timestamp("us", tz="UTC")}
+    fields = []
+    for spec in schema.split(","):
+        name, typ = spec.strip().split(None, 1)
+        fields.append((name, types.get(typ.strip().lower())))
+    return fields
+
+
+def _write_local_parquet(local: str, table, name: str) -> None:
+    """Write ``table`` as ``local/name`` through a hidden tmp file and a
+    rename, so readers see the part file whole or not at all.  Stray
+    ``.part-*.tmp`` files a crashed earlier write left behind are
+    removed first (readers skip them, but they would pile up).  One
+    writer per directory: a concurrent writer's tmp file would be
+    removed too."""
+    import pyarrow.parquet as pq
+
+    os.makedirs(local, exist_ok=True)
+    for stray in glob.glob(f"{glob.escape(local)}/.part-*.tmp"):
+        os.remove(stray)
+    tmp = f"{local}/.part-{uuid.uuid4().hex[:12]}.tmp"
+    pq.write_table(table, tmp)
+    os.rename(tmp, f"{local}/{name}")
+
+
+def read_rows(spark: SparkSession, path: str,
+              columns: list[str] | None = None) -> list[dict]:
+    """Read a SMALL parquet dir (a per-partition summary, a checkpoint
+    table, a one-row meta artifact) as a list of dicts — partition dirs
+    (``part_id=N``) included as columns, same as a Spark read.  With
+    ``columns``, each dict holds exactly those keys; a column the files
+    lack reads back as None (a schema'd read's contract).
+
+    Returns [] when ``path`` is absent or holds no data files (an
+    empty-input write leaves only ``_SUCCESS``).  Any other read error
+    — a corrupt or unreadable part file — raises.
+
+    On ``file:`` the dir is read driver-side with pyarrow: a Spark read
+    costs a partition-listing job (above 32 dirs it is distributed)
+    plus a scan job — ~0.5-0.8 s of scheduling around a few KB of data
+    (measured on the flagship's 64-row summary).  Other schemes take a
+    Spark ``collect``.  NOT for big tables: the result materializes on
+    the driver."""
+    # hidden (``.``/``_``) names are not data — the rule Spark and
+    # pyarrow both apply when listing a dataset
+    if not any(n[0] not in "._" for n in fs_list(spark, path)):
+        return []
+    local = _local_dir(spark, path)
+    if local is not None:
+        import pyarrow.dataset as pads
+
+        ds = pads.dataset(local, format="parquet", partitioning="hive")
+        present = ds.schema.names
+        rows = ds.to_table(
+            columns=None if columns is None
+            else [c for c in columns if c in present]).to_pylist()
+    else:
+        df = spark.read.parquet(path)
+        present = df.columns
+        if columns is not None:
+            df = df.select(*[c for c in columns if c in present])
+        rows = [r.asDict() for r in df.collect()]
+    if columns is None:
+        return rows
+    return [{c: r.get(c) for c in columns} for r in rows]
+
+
 def read_one_row(spark: SparkSession, path: str,
                  schema: str | None = None) -> dict | None:
     """Read a ONE-ROW parquet artifact (store/model meta rows, commit
-    markers) as a plain dict.
-
-    On a local filesystem the row is read driver-side with pyarrow —
-    a Spark job for one row costs ~0.1 s of pure scheduling (measured;
-    the store probe pays it on every call).  Any other scheme, a
-    multi-file dir, or a multi-row file falls back to the normal Spark
-    read.  With ``schema`` (a DDL string), columns the file lacks come
-    back as None — the same contract as a schema'd Spark read.
-    Returns None for an empty artifact."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if fs.getUri().getScheme() == "file":
-        parts = [n for n in fs_list(spark, path) if n.endswith(".parquet")]
-        if len(parts) == 1:
-            local = path
-            if local.startswith("file://"):
-                local = local[len("file://"):]
-            elif local.startswith("file:"):
-                local = local[len("file:"):]
-            import pyarrow.parquet as pq
-            rows = pq.read_table(f"{local}/{parts[0]}").to_pylist()
-            if len(rows) == 1:
-                d = rows[0]
-                if schema is not None:
-                    names = [s.strip().split(None, 1)[0]
-                             for s in schema.split(",")]
-                    d = {n: d.get(n) for n in names}
-                return d
-    rd = spark.read if schema is None else spark.read.schema(schema)
-    r = rd.parquet(path).first()
-    return None if r is None else r.asDict()
+    markers) as a plain dict (``read_rows``; driver-side on ``file:``).
+    With ``schema`` (a DDL string), the dict holds exactly its columns
+    and columns the file lacks come back as None.  Returns None for an
+    empty artifact."""
+    columns = None if schema is None else [n for n, _ in _arrow_fields(schema)]
+    rows = read_rows(spark, path, columns)
+    return rows[0] if rows else None
 
 
 def write_one_row(spark: SparkSession, path: str, schema: str,
                   values) -> None:
     """Write a ONE-ROW parquet artifact (store/model meta rows) with
-    the exact column types the DDL ``schema`` names.
+    the exact column types the DDL ``schema`` names, replacing any
+    previous artifact at ``path``.
 
-    On a local filesystem the row is written driver-side with pyarrow
-    (tmp file + rename; a Spark job for one row costs ~0.12 s of pure
-    scheduling) — the file parquet-identical in schema to the
-    ``one_row_df`` Spark write, so either reader works on either
-    artifact.  Non-local schemes and types outside the scalar set fall
-    back to the Spark write.  NOT for commit markers: those rely on
-    the Spark committer's ``_SUCCESS`` as the commit point."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if fs.getUri().getScheme() == "file":
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        _PA = {"int": pa.int32(), "integer": pa.int32(),
-               "bigint": pa.int64(), "long": pa.int64(),
-               "double": pa.float64(), "float": pa.float32(),
-               "string": pa.string(), "boolean": pa.bool_()}
-        names, types = [], []
-        for spec in schema.split(","):
-            name, typ = spec.strip().split(None, 1)
-            names.append(name)
-            types.append(_PA.get(typ.strip().lower()))
-        if all(t is not None for t in types):
-            local = path
-            if local.startswith("file://"):
-                local = local[len("file://"):]
-            elif local.startswith("file:"):
-                local = local[len("file:"):]
-            import os
-            import uuid
-            fs_delete(spark, path)
-            os.makedirs(local, exist_ok=True)
-            tbl = pa.table({n: pa.array([v], type=t)
-                            for n, t, v in zip(names, types, values)})
-            tmp = f"{local}/.part-{uuid.uuid4().hex[:12]}.tmp"
-            pq.write_table(tbl, tmp)
-            os.rename(tmp, f"{local}/part-00000.parquet")
-            return
-    one_row_df(spark, schema, values) \
-        .coalesce(1).write.mode("overwrite").parquet(path)
+    On ``file:`` the row is written driver-side with pyarrow (a Spark
+    job for one row costs ~0.12 s of pure scheduling) — the file
+    parquet-identical in schema to the ``one_row_df`` Spark write, so
+    either reader works on either artifact.  Other schemes and types
+    outside the scalar set take the Spark write.  NOT for commit
+    markers: those rely on the Spark committer's ``_SUCCESS`` as the
+    commit point."""
+    import pyarrow as pa
 
-
-def _local_fs_path(spark: SparkSession, path: str) -> str | None:
-    """Return the os-level path when ``path``'s Hadoop filesystem is
-    ``file:``, else None (the caller falls back to Spark)."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if fs.getUri().getScheme() != "file":
-        return None
-    local = path
-    if local.startswith("file://"):
-        local = local[len("file://"):]
-    elif local.startswith("file:"):
-        local = local[len("file:"):]
-    return local
-
-
-def read_local_rows(spark: SparkSession, path: str,
-                    columns: list[str] | None = None) -> list[dict] | None:
-    """Driver-side pyarrow read of a SMALL parquet dir (a per-partition
-    summary, a checkpoint table) as a list of dicts — partition dirs
-    (``part_id=N``) included as columns, same as a Spark read.
-
-    A Spark read of such a table costs a distributed partition-listing
-    job (its dir count crosses the 32-path parallel-discovery
-    threshold) plus a scan job — ~0.5-0.8 s of pure scheduling around a
-    few KB of data (measured on the flagship's 64-row summary).  Local
-    ``file:`` filesystems skip all of it; any other scheme or a read
-    error returns None and the caller falls back to the Spark read.
-    NOT for big tables: the result materializes on the driver."""
-    local = _local_fs_path(spark, path)
-    if local is None:
-        return None
-    try:
-        import pyarrow.dataset as pads
-        ds = pads.dataset(local, format="parquet",
-                          partitioning="hive")
-        cols = columns
-        if cols is not None:
-            cols = [c for c in cols if c in ds.schema.names]
-        return ds.to_table(columns=cols).to_pylist()
-    except Exception:
-        return None
-
-
-from contextlib import contextmanager
+    fields = _arrow_fields(schema)
+    local = _local_dir(spark, path)
+    if local is None or any(t is None for _, t in fields):
+        one_row_df(spark, schema, values) \
+            .coalesce(1).write.mode("overwrite").parquet(path)
+        return
+    fs_delete(spark, path)
+    table = pa.table({n: pa.array([v], type=t)
+                      for (n, t), v in zip(fields, values)})
+    _write_local_parquet(local, table, "part-00000.parquet")
 
 
 @contextmanager
@@ -196,10 +207,7 @@ def sequential_listing(spark: SparkSession, path: str):
     bucketed store table).  Not thread-safe: flips a session-level SQL
     conf for the duration (single-threaded probe/compaction paths
     only)."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if fs.getUri().getScheme() != "file":
+    if _local_dir(spark, path) is None:
         yield
         return
     key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
@@ -220,18 +228,14 @@ def sequential_listing(spark: SparkSession, path: str):
 def fs_exists(spark: SparkSession, path: str) -> bool:
     """Existence probe via the Hadoop FileSystem bound to ``path``'s
     scheme — correct for local, file:, hdfs:, s3a:, abfs:, gs: alike."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs, hpath = _fs(spark, path)
     return bool(fs.exists(hpath))
 
 
 def fs_delete(spark: SparkSession, path: str) -> None:
     """Recursive delete via the Hadoop FileSystem bound to ``path``'s
     scheme (no-op when the path does not exist)."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs, hpath = _fs(spark, path)
     if fs.exists(hpath):
         fs.delete(hpath, True)
 
@@ -241,18 +245,15 @@ def fs_rename(spark: SparkSession, src: str, dst: str) -> None:
     posix local filesystems; object stores emulate it — callers needing
     true atomicity there should sit behind a table catalog).  Raises if
     the rename is refused (e.g. destination exists)."""
-    jvm = spark.sparkContext._jvm
-    hsrc = jvm.org.apache.hadoop.fs.Path(src)
-    fs = hsrc.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if not fs.rename(hsrc, jvm.org.apache.hadoop.fs.Path(dst)):
+    fs, hsrc = _fs(spark, src)
+    _, hdst = _fs(spark, dst)
+    if not fs.rename(hsrc, hdst):
         raise IOError(f"rename {src} -> {dst} refused by the filesystem")
 
 
 def fs_list(spark: SparkSession, path: str) -> list[str]:
     """Child names (not full paths) of a directory; [] if absent."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs, hpath = _fs(spark, path)
     if not fs.exists(hpath):
         return []
     return [st.getPath().getName() for st in fs.listStatus(hpath)]
@@ -283,6 +284,18 @@ def snapshot_id(df: DataFrame) -> str | None:
 
 
 class CheckpointStore:
+    """The checkpoint table at ``path``: one 'done' row per finished
+    partition (CHECKPOINT_SCHEMA), appended per wave.
+
+    ``commit_rows`` writes driver-side with pyarrow on ``file:`` and
+    through ``commit``'s Spark append elsewhere.  The two branches store
+    ``finished_ts`` differently: pyarrow writes INT64 (UTC micros),
+    Spark writes INT96 — a per-write ``outputTimestampType`` option does
+    not reach the parquet writer (the footer still reads INT96), and
+    the session conf is not flipped from the pool thread the commit
+    runs on.  Both read back as the same timestamp column, and the
+    branch follows the dir's filesystem, so one dir holds one kind."""
+
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
@@ -309,50 +322,37 @@ class CheckpointStore:
         return sorted(r.part_id for r in rows)
 
     def commit_rows(self, rows: list[dict], snapshot: str,
-                    schema_hash: str, predicate_set: str = "") -> bool:
-        """Driver-side append of 'done' rows (dicts with part_id,
-        n_rows, n_failed, n_violations) — the ``commit`` fast path for
-        LOCAL checkpoint dirs.  The row count is the partition count
-        (≤ n_parts), so a Spark job here is pure scheduling overhead;
-        the parquet file written is schema-identical to the Spark
-        append (CHECKPOINT_SCHEMA types, timestamp in UTC micros) so
-        ``read``/``done_partitions`` see one table.  Returns False
-        (nothing written) when the store is not on a local ``file:``
-        filesystem — the caller falls back to the Spark append."""
-        local = _local_fs_path(self.spark, self.path)
+                    schema_hash: str, predicate_set: str = "") -> None:
+        """Append 'done' rows for ``rows`` (dicts with part_id, n_rows,
+        n_failed, n_violations — per-partition summary rows).  The row
+        count is the partition count (≤ n_parts), so on ``file:`` the
+        append is one driver-side parquet file with the
+        CHECKPOINT_SCHEMA types; elsewhere the rows go through
+        ``commit`` (a pickled ``createDataFrame`` is cheap at this
+        size)."""
+        local = _local_dir(self.spark, self.path)
         if local is None:
-            return False
-        import os
-        import uuid
+            summary = self.spark.createDataFrame(
+                [(r["part_id"], r["n_rows"], r["n_failed"], r["n_violations"])
+                 for r in rows],
+                "part_id int, n_rows long, n_failed long, n_violations long")
+            self.commit(summary, snapshot, schema_hash, predicate_set)
+            return
         from datetime import datetime, timezone
 
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         now = datetime.now(timezone.utc)
-        tbl = pa.table({
-            "part_id": pa.array([int(r["part_id"]) for r in rows],
-                                pa.int32()),
-            "snapshot_id": pa.array([snapshot] * len(rows), pa.string()),
-            "rule_schema_hash": pa.array([schema_hash] * len(rows),
-                                         pa.string()),
-            "predicate_set": pa.array([predicate_set] * len(rows),
-                                      pa.string()),
-            "status": pa.array(["done"] * len(rows), pa.string()),
-            "n_turns": pa.array([int(r["n_rows"]) for r in rows],
-                                pa.int64()),
-            "n_failed": pa.array([int(r["n_failed"]) for r in rows],
-                                 pa.int64()),
-            "n_violations": pa.array([int(r["n_violations"]) for r in rows],
-                                     pa.int64()),
-            "finished_ts": pa.array([now] * len(rows),
-                                    pa.timestamp("us", tz="UTC")),
-        })
-        os.makedirs(local, exist_ok=True)
-        tmp = f"{local}/.part-{uuid.uuid4().hex[:12]}.tmp"
-        pq.write_table(tbl, tmp)
-        os.rename(tmp, f"{local}/part-{uuid.uuid4().hex[:12]}.parquet")
-        return True
+        table = pa.Table.from_pylist(
+            [{"part_id": r["part_id"], "snapshot_id": snapshot,
+              "rule_schema_hash": schema_hash,
+              "predicate_set": predicate_set, "status": "done",
+              "n_turns": r["n_rows"], "n_failed": r["n_failed"],
+              "n_violations": r["n_violations"], "finished_ts": now}
+             for r in rows],
+            schema=pa.schema(_arrow_fields(CHECKPOINT_SCHEMA)))
+        _write_local_parquet(local, table,
+                             f"part-{uuid.uuid4().hex[:12]}.parquet")
 
     def commit(self, per_part_summary: DataFrame, snapshot: str, schema_hash: str,
                predicate_set: str = "") -> None:

@@ -5,7 +5,7 @@ One pass over the transcripts table computes (north star):
 
 1. per-turn rule violations + normalized columns  (single projection)
 2. per-partition pass/fail summary                (one groupBy)
-3. uniqueness of (conv_id, turn_idx)              (salted two-stage agg)
+3. uniqueness of (conv_id, turn_idx)              (partial-aggregated groupBy)
 4. referential conv_id ⋉ conversations            (anti join, AQE-chosen)
 5. ts-ordering per conversation                   (window after
                                                    repartition(conv_id))
@@ -56,7 +56,7 @@ from . import errors as E
 from .engine import SparkValidator
 from .operators import dataset as D
 from .plans.checkpoint import (CheckpointStore, fs_delete, fs_exists,
-                               part_id_col, read_local_rows, snapshot_id)
+                               part_id_col, read_rows, snapshot_id)
 
 
 @dataclass
@@ -197,40 +197,15 @@ class ValidationRun:
             drift, _ = fut_drift.result()
 
         # -- report from the durable summary (covers all partitions,
-        # this run's and previously committed ones alike).  An empty
-        # input writes no summary part files (a partitioned write of
-        # zero rows leaves only _SUCCESS), so fall back to zeros.
-        # Local out_dirs sum the ≤ n_parts summary rows driver-side
-        # (see _run_validation_waves — same rationale, same fallback).
-        summary_rows = read_local_rows(
-            spark, self._path("summary"),
-            columns=["lineage", "n_rows", "n_failed", "n_violations"])
-        if summary_rows is not None:
-            if summary_rows and "lineage" in summary_rows[0]:
-                summary_rows = [r for r in summary_rows
-                                if r["lineage"] == lineage]
-            totals = (
-                sum(r["n_rows"] or 0 for r in summary_rows),
-                sum(r["n_failed"] or 0 for r in summary_rows),
-                sum(r["n_violations"] or 0 for r in summary_rows),
-            )
-        else:
-            try:
-                summary = spark.read.parquet(self._path("summary"))
-                if "lineage" in summary.columns:
-                    summary = summary.filter(F.col("lineage") == lineage)
-                totals = (
-                    summary
-                    .agg(F.sum("n_rows"), F.sum("n_failed"),
-                         F.sum("n_violations"))
-                    .first()
-                )
-            except Exception:
-                totals = (0, 0, 0)
+        # this run's and previously committed ones alike)
+        rows = self._summary_rows(spark, lineage)
+        n_turns, n_failed, n_viol = (
+            sum(r[c] or 0 for r in rows)
+            for c in ("n_rows", "n_failed", "n_violations"))
         return RunReport(
-            n_turns=int(totals[0] or 0),
-            n_failed=int(totals[1] or 0),
-            n_rule_violations=int(totals[2] or 0),
+            n_turns=n_turns,
+            n_failed=n_failed,
+            n_rule_violations=n_viol,
             n_unique_violations=ds_counts.get(E.NOT_UNIQUE.code, 0),
             n_orphan_violations=ds_counts.get(E.ORPHAN_REFERENCE.code, 0),
             n_ordering_violations=ds_counts.get(E.ORDERING_VIOLATION.code, 0),
@@ -347,47 +322,27 @@ class ValidationRun:
 
                 # checkpoint commit for THIS wave, from the durable files —
                 # committed state always describes data that is on disk.
-                # A wave with zero rows writes no readable part files;
-                # nothing to commit (the empty partitions cost nothing to
+                # A wave with zero rows writes no summary rows; nothing
+                # to commit (the empty partitions cost nothing to
                 # revisit).
-                # Local out_dirs take the driver-side path: the summary
-                # is ≤ n_parts one-row files, so the Spark read costs a
-                # partition-discovery job + a scan job and the commit a
-                # write job — ~0.7 s of scheduling around a few KB
-                # (guide §5: no cluster jobs for driver-sized data).
-                # Any non-local scheme falls back to the Spark plan.
-                committed_rows = read_local_rows(
-                    spark, self._path("summary"),
-                    columns=["part_id", "lineage", "n_rows", "n_failed",
-                             "n_violations"])
-                done_driver_side = False
-                if committed_rows is not None:
-                    wset = set(wave_parts)
-                    has_lineage = bool(committed_rows) \
-                        and "lineage" in committed_rows[0]
-                    rows = [r for r in committed_rows
-                            if r["part_id"] in wset
-                            and (not has_lineage
-                                 or r["lineage"] == lineage)]
-                    done_driver_side = (not rows) or store.commit_rows(
-                        rows, snap, shash, predicate_set)
-                if not done_driver_side:
-                    committed = None
-                    try:
-                        committed = (
-                            spark.read.parquet(self._path("summary"))
-                            .filter(F.col("part_id").isin(wave_parts))
-                        )
-                        if "lineage" in committed.columns:
-                            committed = committed.filter(
-                                F.col("lineage") == lineage)
-                    except Exception:
-                        pass
-                    if committed is not None:
-                        store.commit(committed, snap, shash, predicate_set)
+                rows = self._summary_rows(spark, lineage, set(wave_parts))
+                if rows:
+                    store.commit_rows(rows, snap, shash, predicate_set)
             finally:
                 if cfg.persist:
                     annotated.unpersist()
+
+    def _summary_rows(self, spark, lineage, part_ids=None) -> list[dict]:
+        """The durable summary's rows stamped with ``lineage`` (only
+        those of ``part_ids`` when given) — ≤ n_parts rows, read
+        driver-side on ``file:`` (``read_rows``).  A summary written before the lineage
+        column existed reads it as None and counts as this lineage."""
+        rows = read_rows(spark, self._path("summary"),
+                         ["part_id", "lineage", "n_rows", "n_failed",
+                          "n_violations"])
+        return [r for r in rows
+                if r["lineage"] in (lineage, None)
+                and (part_ids is None or r["part_id"] in part_ids)]
 
     def _run_dataset_checks(self, spark, df, conversations) -> dict[int, int]:
         cfg = self.config

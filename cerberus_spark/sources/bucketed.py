@@ -7,7 +7,7 @@ the scan's output partitioning ``HashPartitioning(conv_id)``, which
 satisfies every downstream requirement whose clustering keys CONTAIN
 conv_id:
 
-* uniqueness groupBy (conv_id, turn_idx[, salt])  → no exchange
+* uniqueness groupBy (conv_id, turn_idx)          → no exchange
 * per-conversation ordering window                → no exchange
 * conv_id equi-joins against equally-bucketed dims → no exchange
 

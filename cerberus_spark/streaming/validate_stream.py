@@ -243,18 +243,17 @@ def dataset_checks_foreach_batch(out_dir: str,
                                  key_cols: tuple = ("conv_id", "turn_idx"),
                                  conversations: DataFrame | None = None,
                                  conv_col: str = "conv_id",
-                                 n_salt: int = 16,
                                  dedup_text_col: str | None = None):
     """Streaming parity for the BATCH dataset checks: a foreachBatch
-    callback running the salted uniqueness check and the referential
+    callback running the uniqueness check and the referential
     anti-join per micro-batch (the north rule's dataset constraints over
     an unbounded source).
 
     Cross-batch uniqueness works through a durable seen-keys store under
     ``{out_dir}/seen_keys/epoch=N``: each batch's duplicates are
 
-    * within-batch — the same salted two-stage groupBy the batch
-      operator uses (operators.dataset.salted_counts), AND
+    * within-batch — the same partial-aggregated groupBy the batch
+      operator uses (operators.dataset.key_counts), AND
     * cross-batch — a semi-join of this batch's keys against all
       EARLIER epochs' committed keys (epoch partition-pruned to
       ``epoch < current``, so a retried epoch never flags itself).
@@ -278,7 +277,7 @@ def dataset_checks_foreach_batch(out_dir: str,
         spark = batch_df.sparkSession
         store = f"{out_dir}/seen_keys"
 
-        within = D.uniqueness_violations(batch_df, keys, n_salt=n_salt)
+        within = D.uniqueness_violations(batch_df, keys)
         # existence-gate instead of catching Exception: a transient/real
         # read failure (corrupt file, storage error) must propagate so
         # the streaming query retries the batch — swallowing it would

@@ -25,3 +25,16 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture(params=["local", "spark"])
+def io_branch(request, monkeypatch):
+    """Run the test on each small-artifact IO branch: ``local`` is the
+    driver-side pyarrow branch a ``file:`` dir takes, ``spark`` the
+    Spark branch every other scheme (s3a, hdfs, ...) takes — forced
+    here by making the branch decision report a non-local dir."""
+    if request.param == "spark":
+        from cerberus_spark.plans import checkpoint
+
+        monkeypatch.setattr(checkpoint, "_local_dir", lambda spark, path: None)
+    return request.param

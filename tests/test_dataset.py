@@ -73,7 +73,7 @@ def test_drift(spark):
     assert moved["role"]["psi"] > 0.01
 
 
-def test_full_run_and_resume(spark):
+def test_full_run_and_resume(spark, io_branch):
     # resume lineage requires a file-backed input (in-memory DataFrames
     # have no stable snapshot id — see test_in_memory_input_never_resumes)
     data_dir = tempfile.mkdtemp(prefix="cerbdata_")
@@ -116,7 +116,7 @@ def test_full_run_and_resume(spark):
         shutil.rmtree(data_dir, ignore_errors=True)
 
 
-def test_waves_commit_incrementally(spark):
+def test_waves_commit_incrementally(spark, io_branch):
     """waves=4 processes partitions in 4 groups, each wave's checkpoint
     rows committed after its outputs land — same final results."""
     data_dir = tempfile.mkdtemp(prefix="cerbdata_")
@@ -149,7 +149,7 @@ def test_waves_commit_incrementally(spark):
             shutil.rmtree(d, ignore_errors=True)
 
 
-def test_reused_out_dir_never_mixes_lineages(spark):
+def test_reused_out_dir_never_mixes_lineages(spark, io_branch):
     """ADVICE r2 (medium): dynamic partition overwrite leaves partitions
     that have zero rows under a NEW input untouched on disk — reusing an
     out_dir with a different dataset must not mix the old run's
@@ -235,27 +235,89 @@ def test_stats_bound_violations(spark, data):
     assert all(r["code"] == 0x105 for r in got)
 
 
-def test_salted_counts_equal_plain_counts_fuzz(spark):
-    """The salted two-stage aggregation is EXACTLY the plain groupBy
-    count for any key distribution (including a pathological hot key)
-    and any salt width — fuzzed over random multiplicities."""
+def test_key_counts_equal_counter_fuzz(spark):
+    """The one partial-aggregated groupBy behind uniqueness counts
+    EXACTLY what a Python Counter counts, for any key distribution
+    (including a pathological hot key) and any number of map tasks
+    feeding partials — fuzzed over random multiplicities."""
     import random
-
-    from cerberus_spark.operators.dataset import salted_counts
-    from pyspark.sql import functions as SF
+    from collections import Counter
 
     rng = random.Random(11)
     rows = []
     for k in range(40):
         mult = rng.choice([1, 1, 1, 2, 3, 7, 500 if k == 0 else 1])
         rows += [(f"k{k}", i % 5) for i in range(mult)]
-    df = spark.createDataFrame(rows, "a string, b int").repartition(7)
-    for n_salt in (1, 4, 16):
-        salted = {tuple(r[:2]): r["n"]
-                  for r in salted_counts(df, ["a", "b"], n_salt).collect()}
-        plain = {tuple(r[:2]): r["n"] for r in
-                 df.groupBy("a", "b").agg(SF.count(SF.lit(1)).alias("n")).collect()}
-        assert salted == plain, n_salt
+    want = Counter(rows)
+    for n_map in (1, 7, 16):
+        df = spark.createDataFrame(rows, "a string, b int").repartition(n_map)
+        got = {(r["a"], r["b"]): r["n"]
+               for r in D.key_counts(df, ["a", "b"]).collect()}
+        assert got == want, n_map
+
+
+def test_unreadable_summary_fails_the_report(spark, io_branch, tmp_path):
+    """Only an absent summary or one without data files reads as empty:
+    a corrupt summary part file must fail a fully resumed run's report,
+    not report n_turns=0."""
+    import os
+
+    from cerberus_spark.sources.transcripts import write_dataset, load
+
+    write_dataset(str(tmp_path / "data"), 500, seed=7)
+    t, c = load(spark, str(tmp_path / "data"))
+    cfg = RunConfig(out_dir=str(tmp_path / "out"), n_parts=4)
+    assert ValidationRun(TURN_SCHEMA, cfg).execute(t, c).n_turns == 500
+
+    summary = tmp_path / "out" / "summary"
+    part = next(n for n in sorted(os.listdir(summary)) if n.endswith(".parquet"))
+    (summary / part).write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        ValidationRun(TURN_SCHEMA, cfg).execute(t, c)
+
+
+def test_resume_after_single_fresh_run(spark, io_branch, tmp_path):
+    """A fresh single-wave run writes summary and violations flat.  A
+    rerun skips exactly the non-empty partitions, reports the same
+    totals, and its waves over the never-committed (empty) partitions
+    leave no ``part_id=`` dir beside the flat files."""
+    import os
+
+    from cerberus_spark.plans.checkpoint import part_id_col
+    from cerberus_spark.sources.transcripts import write_dataset, load
+
+    write_dataset(str(tmp_path / "data"), 60, seed=9)
+    t, c = load(spark, str(tmp_path / "data"))
+    out = str(tmp_path / "out")
+    cfg = RunConfig(out_dir=out, n_parts=64)
+    non_empty = t.select(part_id_col("conv_id", 64)).distinct().count()
+    assert 0 < non_empty < 64
+
+    r1 = ValidationRun(TURN_SCHEMA, cfg).execute(t, c)
+    r2 = ValidationRun(TURN_SCHEMA, cfg).execute(t, c)
+    assert (r1.skipped_partitions, r2.skipped_partitions) == (0, non_empty)
+    assert r1.n_turns == r2.n_turns == 60
+    assert r1.n_failed == r2.n_failed
+    for sub in ("summary", "violations"):
+        names = os.listdir(f"{out}/{sub}")
+        assert any(n.endswith(".parquet") for n in names), sub
+        assert not [n for n in names if n.startswith("part_id=")], sub
+
+
+def test_empty_input_reports_zeros(spark, io_branch, tmp_path):
+    """An empty input leaves a summary without data rows: one empty
+    part file from the flat single-wave write, only ``_SUCCESS`` from
+    the partitioned waved write.  The report reads either as zeros."""
+    from cerberus_spark.sources.transcripts import write_dataset, load
+
+    write_dataset(str(tmp_path / "data"), 60, seed=9)
+    t, c = load(spark, str(tmp_path / "data"))
+    for waves in (1, 4):
+        cfg = RunConfig(out_dir=str(tmp_path / f"out{waves}"), n_parts=8,
+                        waves=waves)
+        r = ValidationRun(TURN_SCHEMA, cfg).execute(t.limit(0), c)
+        assert (r.n_turns, r.n_failed, r.n_rule_violations,
+                r.skipped_partitions) == (0, 0, 0, 0), waves
 
 
 def test_failed_waves_do_not_commit_drift_baseline(spark):

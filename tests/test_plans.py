@@ -91,7 +91,7 @@ def test_text_ops_stay_in_codegen(spark):
 
 def test_bucketed_input_runs_shuffle_free(spark, tmp_path):
     """A transcripts table bucketed by conv_id satisfies the clustering
-    requirements of uniqueness (groupBy conv_id+turn_idx+salt) and the
+    requirements of uniqueness (groupBy conv_id+turn_idx) and the
     per-conversation ordering window — ZERO exchanges in either plan;
     the same plans over plain parquet need their shuffles."""
     from cerberus_spark.operators import dataset as D
