@@ -97,7 +97,7 @@ def _read(spark: SparkSession, sf_dir: str, name: str,
 
 
 def q_validate_events_violations(spark, sf_dir):
-    ev = _read(spark, sf_dir, "events")
+    ev = _read(spark, sf_dir, "events", fan_out=False)
     res = SparkValidator(EVENTS_RULES, key_cols=("event_id",)).validate(ev)
     return res.violations.select(
         "event_id",

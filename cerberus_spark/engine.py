@@ -9,10 +9,20 @@ a SINGLE Spark projection that computes, per row:
   validator.py:690-710)
 * one ``violations: array<struct>`` column — every failed rule as a
   violation row (error contract in ``cerberus_spark.errors``)
-* ``passed: boolean`` — ``size(violations) == 0``
+* ``passed: boolean`` — NOT the compiled fail predicate: every rule
+  compiles to a violation fragment plus a null-free predicate that is
+  true exactly when the fragment is non-empty (``operators.compile.
+  Frag``), so ``passed`` never reads ``violations``.  Consumers that
+  only need pass/fail — ``counts()``, ``validated()``, the corpus
+  ``bool_and(passed)`` and the streaming ingest's ``_ok_valid`` gate —
+  never build a violation struct (column pruning drops the unused
+  ``violations`` projection).
 
-Everything is Catalyst Column algebra inside whole-stage codegen; the
-scan is read once, no shuffle is introduced by per-row validation.
+Everything is Catalyst Column algebra — inside whole-stage codegen for
+flat rule-sets; a per-element nested rule (a ``transform``/``exists``
+lambda, CodegenFallback) drops the projection to per-expression
+codegen.  The scan is read once, no shuffle is introduced by per-row
+validation.
 Dataset-level constraints (uniqueness/referential/drift — which the
 reference cannot express) live in ``cerberus_spark.operators.dataset``.
 """
@@ -27,12 +37,26 @@ from . import errors as E
 from .dsl import RuleSetSchema
 from .operators.compile import (
     CompileContext,
+    Frag,
     RuleCompiler,
     Scope,
     collect_violations,
     make_violation,
 )
 from .operators.normalize import Normalizer, Slot, has_normalization
+
+
+def explode_violations(annotated: DataFrame, cols: list) -> DataFrame:
+    """``cols`` plus the fields of each violation, one row per violation.
+
+    ``explode_outer`` and a not-NULL filter rather than ``explode``: for
+    a plain ``explode`` Spark infers ``size(violations) > 0`` below the
+    generator (InferFiltersFromGenerate), filter pushdown substitutes
+    the whole violation expression into it, and every row builds its
+    violation array twice."""
+    return (annotated.select(*cols, F.explode_outer("violations").alias("v"))
+            .filter(F.col("v").isNotNull())
+            .select(*cols, "v.*"))
 
 
 class ValidationResult:
@@ -50,11 +74,7 @@ class ValidationResult:
         """Exploded violations table, one row per (row key, violation),
         ordered deterministically like the reference's sorted error list
         (validator.py:274, errors.py:122-126)."""
-        keys = [F.col(k) for k in self.key_cols]
-        return (
-            self.annotated.select(*keys, F.explode("violations").alias("v"))
-            .select(*keys, "v.*")
-        )
+        return explode_violations(self.annotated, list(self.key_cols))
 
     def violations_sorted(self) -> DataFrame:
         order = list(self.key_cols) + ["document_path", "schema_path", "code"]
@@ -247,7 +267,7 @@ class SparkValidator:
                 setter_deps[out_name] = [d for d in deps if d in colmap]
 
         resolved: dict[str, tuple[Column, T.DataType]] = {}
-        norm_violations: list[Column] = []
+        norm_violations: list[Frag] = []
 
         def _resolve_field(out_name: str, cycle: bool = False) -> None:
             slot = colmap[out_name]
@@ -303,7 +323,7 @@ class SparkValidator:
         rule_violations = self.compiler.compile_schema(self.schema, scope)
 
         # 3. unknown-field handling (reference: validator.py:1065-1078)
-        unknown_violations: list[Column] = []
+        unknown_violations: list[Frag] = []
         if self.allow_unknown is False:
             for name, (col, dtype) in norm_exprs.items():
                 if name in self.schema.expanded or name in self.key_cols:
@@ -312,12 +332,10 @@ class SparkValidator:
                 # (validator.py:289-291 appends (field, rule) only for
                 # other codes)
                 unknown_violations.append(
-                    collect_violations([
-                        make_violation(
-                            col.isNotNull(), E.UNKNOWN_FIELD, [name], [],
-                            rule=None, value=col, value_dtype=dtype,
-                        )
-                    ])
+                    make_violation(
+                        col.isNotNull(), E.UNKNOWN_FIELD, [name], [],
+                        rule=None, value=col, value_dtype=dtype,
+                    )
                 )
         elif isinstance(self.allow_unknown, Mapping):
             # requirement semantics never apply to unknown fields: the
@@ -344,16 +362,16 @@ class SparkValidator:
                 bulk_compiler.compile_schema(bulk, scope, ["__allow_unknown__"])
             )
 
-        all_arrays = norm_violations + [rule_violations] + unknown_violations
-        violations = all_arrays[0] if len(all_arrays) == 1 else F.concat(*all_arrays)
+        out = collect_violations(
+            norm_violations + [rule_violations] + unknown_violations)
 
         out_cols = [
             norm_exprs[name][0].alias(name) for name in norm_exprs
         ]
         return [
             *out_cols,
-            violations.alias("violations"),
-            (F.size(violations) == 0).alias("passed"),
+            out.violations.alias("violations"),
+            (~out.fails).alias("passed"),
         ]
 
     def validate(self, df: DataFrame) -> ValidationResult:

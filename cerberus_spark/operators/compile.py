@@ -1,10 +1,12 @@
 """RuleSet → Catalyst Column compiler.
 
 Compiles one validation schema (the reference engine's declarative rule
-language, see ``cerberus_spark.dsl``) into a single Spark ``Column`` of
-type ``array<violation_struct>`` per row — evaluated in ONE projection,
-fully inside whole-stage codegen.  No per-row Python anywhere; custom
-checkers go through vectorized pandas UDFs.
+language, see ``cerberus_spark.dsl``) into a ``Frag`` pair of Spark
+Columns per row: the ``array<violation_struct>`` it emits and a
+null-free boolean ``fails`` predicate that is true exactly when that
+array is non-empty — both evaluated in ONE projection, fully inside
+whole-stage codegen.  No per-row Python anywhere; custom checkers go
+through vectorized pandas UDFs.
 
 The reference (/root/reference/cerberus/validator.py) interprets rules
 row-at-a-time with an ordered queue and *suppression* semantics
@@ -36,7 +38,7 @@ import json
 import re
 from collections.abc import Mapping, Sequence
 from dataclasses import dataclass, field as dc_field
-from typing import Callable
+from typing import Callable, NamedTuple
 
 import pandas as pd  # noqa: F401 — needed to resolve pandas_udf type hints
 from pyspark.sql import Column, functions as F, types as T
@@ -92,11 +94,6 @@ def null_string() -> Column:
     return _memo_const("null_string", lambda: F.lit(None).cast("string"))
 
 
-def _null_violation() -> Column:
-    return _memo_const("null_violation",
-                       lambda: F.lit(None).cast(E.VIOLATION_STRUCT))
-
-
 def stringify(col: Column, dtype: T.DataType | None) -> Column:
     """Serialize a value column to its string form for the violation row."""
     if dtype is None:
@@ -116,6 +113,25 @@ def _path_col(elems: Sequence) -> Column:
     return F.array(*cols)
 
 
+def _false() -> Column:
+    return _memo_const("false", lambda: F.lit(False))
+
+
+class Frag(NamedTuple):
+    """A compiled violation fragment: the ``array<violation>`` it emits
+    and its fail predicate — never NULL, and true exactly when
+    ``violations`` is non-empty.  Consumers that only need pass/fail
+    select ``fails`` and never build a violation struct."""
+
+    violations: Column
+    fails: Column
+
+
+def no_violations() -> Frag:
+    """The fragment of a rule that can never fire."""
+    return Frag(empty_violations(), _false())
+
+
 def make_violation(
     cond: Column,
     error_def: E.ErrorDefinition,
@@ -127,16 +143,23 @@ def make_violation(
     value: Column | None = None,
     value_dtype: T.DataType | None = None,
     info: Column | str | None = None,
-) -> Column:
+) -> Frag:
     """A violation FRAGMENT: ``CASE WHEN cond THEN array(struct) ELSE
-    array() END``.
+    array() END`` paired with the fail predicate ``coalesce(cond,
+    false)``.  Both wrap the SAME ``cond`` Column, so a Python-UDF rule
+    inside it is one UDF evaluation even when both are selected.
 
-    Fragments compose by pure ``concat`` — deliberately NO higher-order
-    function (no ``filter``/``exists`` lambda): HOFs are CodegenFallback
-    expressions, and one in the projection interprets its entire child
-    subtree per row — measured ~30× slower on the flat transcript
-    rule-set.  This shape keeps the whole per-row validation inside
-    whole-stage codegen."""
+    Fragments compose by pure ``concat`` (fails: OR) and ``F.when``
+    gates (fails: AND) — deliberately NO higher-order function (no
+    ``filter``/``exists`` lambda) around flat rules: HOFs are
+    CodegenFallback expressions, and one in the projection interprets
+    its entire child subtree per row — measured ~30× slower on the flat
+    transcript rule-set.  This shape keeps the whole per-row validation
+    inside whole-stage codegen.  Nested rules, which run per element
+    inside a ``transform`` lambda anyway, sit behind an ``exists`` guard
+    over their elements' fail predicates (``per_element``), so the
+    struct-building ``transform`` only runs for rows where some element
+    fails."""
     constraint_str = (
         constraint
         if isinstance(constraint, Column)
@@ -156,16 +179,56 @@ def make_violation(
         (stringify(value, value_dtype) if value is not None else null_string()).alias("value"),
         info_col.cast("string").alias("info"),
     )
-    return F.when(cond, F.array(struct)).otherwise(empty_violations())
+    return Frag(F.when(cond, F.array(struct)).otherwise(empty_violations()),
+                F.coalesce(cond, _false()))
 
 
-def collect_violations(fragments: list[Column]) -> Column:
-    """Concatenate violation-array fragments (each 0-or-1 element)."""
+def _any(preds: list[Column]) -> Column:
+    """OR of null-free predicates as a balanced tree (a left-deep chain
+    over a wide schema's hundreds of rules nests as deep as it is
+    long)."""
+    while len(preds) > 1:
+        preds = [preds[i] | preds[i + 1] if i + 1 < len(preds) else preds[i]
+                 for i in range(0, len(preds), 2)]
+    return preds[0]
+
+
+def collect_violations(fragments: list[Frag | None]) -> Frag:
+    """Concatenate violation fragments; the fail predicates OR."""
+    fragments = [f for f in fragments if f is not None]
     if not fragments:
-        return empty_violations()
+        return no_violations()
     if len(fragments) == 1:
         return fragments[0]
-    return F.concat(*fragments)
+    return Frag(F.concat(*[f.violations for f in fragments]),
+                _any([f.fails for f in fragments]))
+
+
+def guard(gate: Column, frag: Frag) -> Frag:
+    """``frag`` where ``gate`` holds, nothing elsewhere (a NULL gate
+    counts as false)."""
+    return Frag(F.when(gate, frag.violations).otherwise(empty_violations()),
+                F.coalesce(gate & frag.fails, _false()))
+
+
+def per_element(gate: Column, elems: Column,
+                element: Callable[[Column, Column | str], Frag]) -> Frag:
+    """Rules run on every element of the array ``elems`` where ``gate``
+    holds; ``element(x, i)`` compiles one element's fragment, ``i``
+    being its index for the document path.
+
+    The fail predicate is ``gate AND exists(elems, x -> fails(x))``, and
+    the same predicate guards the violation-building ``flatten(
+    transform(...))``, which therefore runs only for rows where some
+    element fails.  The guard compiles its own copy of the element
+    rules with a constant index, so it cannot depend on the index (the
+    ``exists`` lambda has none); the fail predicates being null-free
+    keeps three-valued ``exists`` out of NULL.  The guard is exact: it
+    is false only when every element's fragment is empty."""
+    fails = F.coalesce(
+        gate & F.exists(elems, lambda x: element(x, "*").fails), _false())
+    arr = F.flatten(F.transform(elems, lambda x, i: element(x, i).violations))
+    return Frag(F.when(fails, arr).otherwise(empty_violations()), fails)
 
 
 # ---------------------------------------------------------------------------
@@ -534,7 +597,8 @@ class Scope:
 
 
 class RuleCompiler:
-    """Compiles an expanded schema into per-field violation arrays."""
+    """Compiles an expanded schema into per-field violation fragments
+    (``Frag``: violation array + fail predicate)."""
 
     def __init__(self, ctx: CompileContext):
         self.ctx = ctx
@@ -543,7 +607,7 @@ class RuleCompiler:
 
     def compile_schema(
         self, schema: RuleSetSchema | Mapping, scope: Scope, schema_path: Sequence = ()
-    ) -> Column:
+    ) -> Frag:
         """All violations for one mapping level: per-field rules +
         required-fields check + unknown-field handling."""
         expanded = schema.expanded if isinstance(schema, RuleSetSchema) else dict(schema)
@@ -603,7 +667,7 @@ class RuleCompiler:
                         unrequire_guard.setdefault(ex, []).append(f_col.isNotNull())
                         excl_group.add(ex)
 
-        arrays: list[Column] = []
+        arrays: list[Frag] = []
 
         if self.ctx.null_semantics == "none" and group_ran and not self.ctx.update:
             # at least one member of the exclusion group must be non-null
@@ -643,17 +707,15 @@ class RuleCompiler:
                 # relieves even a field the frame doesn't carry.
                 if self._is_required(schema_path, fname, rules):
                     req_cond = F.lit(True)
-                    for guard in unrequire_guard.get(fname, ()):
-                        req_cond = req_cond & ~guard
+                    for waiver in unrequire_guard.get(fname, ()):
+                        req_cond = req_cond & ~waiver
                     arrays.append(
-                        collect_violations([
-                            make_violation(
-                                req_cond, E.REQUIRED_FIELD,
-                                list(scope.doc_path) + [fname],
-                                list(schema_path) + [fname, "required"],
-                                constraint=True,
-                            )
-                        ])
+                        make_violation(
+                            req_cond, E.REQUIRED_FIELD,
+                            list(scope.doc_path) + [fname],
+                            list(schema_path) + [fname, "required"],
+                            constraint=True,
+                        )
                     )
                 continue
             arrays.append(
@@ -667,9 +729,7 @@ class RuleCompiler:
         # validator.py:1065-1078) — handled by the engine at top level where
         # the full column set is known; nested struct levels are closed-world
         # by construction (Spark structs are fixed-schema).
-        if not arrays:
-            return empty_violations()
-        return F.concat(*arrays) if len(arrays) > 1 else arrays[0]
+        return collect_violations(arrays)
 
     def _abs(self, schema_path, fname) -> tuple:
         return tuple(schema_path) + (fname,)
@@ -691,7 +751,7 @@ class RuleCompiler:
         scope: Scope,
         schema_path: Sequence,
         unrequire: list[Column] | None = None,
-    ) -> Column:
+    ) -> Frag:
         doc_path = list(scope.doc_path) + [fname]
         spath = list(schema_path) + [fname]
         return self.compile_rules(
@@ -712,7 +772,7 @@ class RuleCompiler:
         unrequire: list[Column] | None = None,
         dynamic: bool = False,
         original: Column | None = None,
-    ) -> Column:
+    ) -> Frag:
         """Compile one rules-set applied to one value expression.
 
         ``doc_path`` elements may be Columns (dynamic list indices).
@@ -721,8 +781,8 @@ class RuleCompiler:
         string values there get runtime per-value type checks.
         """
         ctx = self.ctx
-        out: list[Column] = []
-        nested_arrays: list[Column] = []
+        out: list[Frag] = []
+        nested_arrays: list[Frag] = []
 
         present = value.isNotNull()
         is_null = value.isNull()
@@ -735,8 +795,8 @@ class RuleCompiler:
         if ctx.none_skips_rules:
             if required:
                 req_cond = is_null
-                for guard in unrequire or ():
-                    req_cond = req_cond & ~guard
+                for waiver in unrequire or ():
+                    req_cond = req_cond & ~waiver
                 # reference quirk: when required comes from require_all (no
                 # explicit rule), schema_path is the literal string
                 # '__require_all__' (validator.py:300-304)
@@ -921,10 +981,7 @@ class RuleCompiler:
             else:  # pragma: no cover — dsl.validate_schema blocks unknown rules
                 raise SchemaError(f"rule '{rule}' not supported by the compiler")
 
-        base = collect_violations([c for c in out if c is not None])
-        for arr in nested_arrays:
-            base = F.concat(base, arr)
-        return base
+        return collect_violations(out + nested_arrays)
 
     # -- individual rules ---------------------------------------------------
 
@@ -1139,7 +1196,7 @@ class RuleCompiler:
                     sub, value.getItem(i), elem_dt,
                     list(doc_path) + [str(i)], spath2 + [str(i)], scope,
                 )
-                nested.append(F.when(size_ok, arr).otherwise(empty_violations()))
+                nested.append(guard(size_ok, arr))
         return direct, nested
 
     def _c_schema(self, sub, value, dtype, gate, doc_path, spath, scope):
@@ -1151,75 +1208,58 @@ class RuleCompiler:
                 f.name: (value.getField(f.name), f.dataType) for f in dtype.fields
             }
             child = Scope(child_fields, doc_path, parent=scope)
-            arr = self.compile_schema(sub, child, spath2)
-            return F.when(gate, arr).otherwise(empty_violations())
+            return guard(gate, self.compile_schema(sub, child, spath2))
         if isinstance(dtype, T.MapType):
             # fixed-key subschema over a dynamic map: access declared keys
             child_fields = {
                 k: (value.getItem(k), dtype.valueType) for k in sub
             }
             child = Scope(child_fields, doc_path, parent=scope, dynamic=True)
-            arr = self.compile_schema(sub, child, spath2)
-            return F.when(gate, arr).otherwise(empty_violations())
+            return guard(gate, self.compile_schema(sub, child, spath2))
         if isinstance(dtype, T.ArrayType):
             elem_dt = dtype.elementType
-            per_elem = F.transform(
-                value,
-                lambda x, i: self.compile_rules(
-                    sub, x, elem_dt, list(doc_path) + [i], spath2, scope
-                ),
-            )
-            return F.when(gate, F.flatten(per_elem)).otherwise(empty_violations())
+            return per_element(gate, value, lambda x, i: self.compile_rules(
+                sub, x, elem_dt, list(doc_path) + [i], spath2, scope))
         # wrong shape for a schema rule
-        return collect_violations([
-            make_violation(gate, E.BAD_TYPE_FOR_SCHEMA, doc_path, spath2)
-        ])
+        return make_violation(gate, E.BAD_TYPE_FOR_SCHEMA, doc_path, spath2)
 
     def _c_keysrules(self, sub, value, dtype, gate, doc_path, spath, scope):
         """reference: validator.py:1396-1410 — per-key leaf errors."""
         spath2 = list(spath) + ["keysrules"]
         if not isinstance(dtype, T.MapType):
-            return empty_violations()
-        per_key = F.transform(
-            F.map_keys(value),
-            lambda k: self.compile_rules(
-                sub, k, dtype.keyType, list(doc_path) + [k], spath2, scope,
-                dynamic=True,
-            ),
-        )
-        return F.when(gate, F.flatten(per_key)).otherwise(empty_violations())
+            return no_violations()
+        return per_element(gate, F.map_keys(value), lambda k, _i: self.compile_rules(
+            sub, k, dtype.keyType, list(doc_path) + [k], spath2, scope,
+            dynamic=True,
+        ))
 
     def _c_valuesrules(self, sub, value, dtype, gate, doc_path, spath, scope):
         """reference: validator.py:1562-1578 — per-entry leaf errors."""
         spath2 = list(spath) + ["valuesrules"]
         if not isinstance(dtype, T.MapType):
-            return empty_violations()
-        per_val = F.transform(
-            F.map_entries(value),
-            lambda e: self.compile_rules(
-                sub, e.getField("value"), dtype.valueType,
-                list(doc_path) + [e.getField("key")], spath2, scope,
-                dynamic=True,
-            ),
-        )
-        return F.when(gate, F.flatten(per_val)).otherwise(empty_violations())
+            return no_violations()
+        return per_element(gate, F.map_entries(value), lambda e, _i: self.compile_rules(
+            sub, e.getField("value"), dtype.valueType,
+            list(doc_path) + [e.getField("key")], spath2, scope,
+            dynamic=True,
+        ))
 
     def _c_logical(self, op, definitions, outer_rules, value, dtype, gate,
                    doc_path, spath, scope, dynamic=False):
         """reference: __validate_logical validator.py:1292-1341 — boolean
-        algebra over sub-rules-set predicates; oneof = exactly-one count."""
+        algebra over sub-rules-set predicates; oneof = exactly-one count
+        of the definitions whose fail predicate is false."""
         spath2 = list(spath) + [op]
-        valid_flags = []
+        subs = []
         for i, definition in enumerate(definitions):
             d = dict(definition)
             # children inherit 'type' from the outer rules (validator.py:1302-1304)
             if "type" not in d and "type" in outer_rules:
                 d["type"] = outer_rules["type"]
-            sub_arr = self.compile_rules(
+            subs.append(self.compile_rules(
                 d, value, dtype, doc_path, spath2 + [str(i)], scope, dynamic=dynamic
-            )
-            valid_flags.append(((F.size(sub_arr) == 0).cast("int"), sub_arr))
-        flags = [f for f, _ in valid_flags]
+            ))
+        flags = [(~sub.fails).cast("int") for sub in subs]
         valids = sum(flags[1:], flags[0]) if flags else F.lit(0)
         n = len(definitions)
         if op == "anyof":
@@ -1240,11 +1280,7 @@ class RuleCompiler:
             return parent
         # per-definition child errors, emitted only when the logical rule
         # itself failed (reference keeps them as the *of error's children)
-        children = [
-            F.when(gate & cond, sub_arr).otherwise(empty_violations())
-            for _f, sub_arr in valid_flags
-        ]
-        return F.concat(parent, *children)
+        return collect_violations([parent] + [guard(gate & cond, sub) for sub in subs])
 
     def _c_dependencies(self, deps, value, gate, doc_path, spath, scope):
         """reference: validator.py:1182-1223.  Returns (violations, ok_gate);

@@ -65,7 +65,7 @@ from ..dsl import (
     SchemaError,
     _looks_like_rules_set as _looks_like_rules,
 )
-from .compile import make_violation, collect_violations, empty_violations, stringify
+from .compile import Frag, collect_violations, guard, make_violation, stringify
 
 
 def has_normalization(rules: Mapping) -> bool:
@@ -300,8 +300,8 @@ class Normalizer:
         doc_path: list, spath: list,
         setter_scope: Mapping | None = None, setter_cycle: bool = False,
         purge_unknown: bool = False, allow_unknown: object = False,
-    ) -> tuple[Column, T.DataType, Column]:
-        """Returns (normalized value, output dtype, violations array).
+    ) -> tuple[Column, T.DataType, Frag]:
+        """Returns (normalized value, output dtype, violation fragment).
 
         ``setter_scope`` maps field name → already-normalized Column for
         2-arg default_setters; ``setter_cycle`` marks this field as part
@@ -315,8 +315,8 @@ class Normalizer:
         (validator.py:843-849), and purging fires only when the
         effective purge flag is set AND unknowns are not allowed
         (validator.py:698-699)."""
-        violations = []          # when-guarded violation structs
-        nested_arrays = []       # array<violation> columns from recursion
+        violations = []          # this field's violation fragments
+        nested_arrays = []       # fragments from recursion
         original, original_dtype = value, dtype
 
         # default fill (reference: validator.py:947-963 — fires on missing
@@ -475,9 +475,7 @@ class Normalizer:
                             purge_unknown=eff_purge, allow_unknown=eff_allow,
                         )
                         # nested violations only apply when the parent exists
-                        nested_arrays.append(
-                            F.when(original.isNotNull(), v2).otherwise(empty_violations())
-                        )
+                        nested_arrays.append(guard(original.isNotNull(), v2))
                     new_fields.append(sv.alias(tgt))
                     sub_types.append(T.StructField(tgt, sdt, True))
                 # declared sub-fields entirely MISSING from the struct
@@ -501,9 +499,7 @@ class Normalizer:
                         doc_path + [fld], spath + [fname, "schema"],
                         purge_unknown=eff_purge, allow_unknown=eff_allow,
                     )
-                    nested_arrays.append(
-                        F.when(original.isNotNull(), v2).otherwise(empty_violations())
-                    )
+                    nested_arrays.append(guard(original.isNotNull(), v2))
                     new_fields.append(sv.alias(fld))
                     sub_types.append(T.StructField(fld, sdt, True))
                 value = F.when(original.isNotNull(), F.struct(*new_fields))
@@ -603,9 +599,7 @@ class Normalizer:
                                     f"map-value normalization for key '{k}' changes the "
                                     f"value type {vdt.simpleString()} -> {sdt.simpleString()}; "
                                     "a map column's values share one type")
-                            nested_arrays.append(
-                                F.when(original.isNotNull(), v2).otherwise(empty_violations())
-                            )
+                            nested_arrays.append(guard(original.isNotNull(), v2))
                             present = F.exists(
                                 post, lambda e: e.getField("key") == F.lit(k).cast(kt))
                             keep = present | F.lit("default" in srules)
@@ -781,7 +775,4 @@ class Normalizer:
             value = F.transform_values(value, _vapply)
             dtype = T.MapType(dtype.keyType, new_vdt)
 
-        arr = collect_violations(violations) if violations else empty_violations()
-        for nested in nested_arrays:
-            arr = F.concat(arr, nested)
-        return value, dtype, arr
+        return value, dtype, collect_violations(violations + nested_arrays)

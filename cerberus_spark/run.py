@@ -53,7 +53,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import errors as E
-from .engine import SparkValidator
+from .engine import SparkValidator, explode_violations
 from .operators import dataset as D
 from .plans.checkpoint import (CheckpointStore, fs_delete, fs_exists,
                                part_id_col, read_rows, snapshot_id)
@@ -264,9 +264,7 @@ class ValidationRun:
                 # task.  Violations are a small fraction of input rows, so
                 # this shuffle is cheap; add a second key if one partition's
                 # violations ever outgrow a task.
-                viol = annotated.select(
-                    *keys, "part_id", F.explode("violations").alias("v")
-                ).select(*keys, "part_id", "v.*")
+                viol = explode_violations(annotated, keys + ["part_id"])
 
                 def _write_violations():
                     if single_fresh:

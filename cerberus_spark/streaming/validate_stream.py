@@ -29,7 +29,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..engine import SparkValidator
+from ..engine import SparkValidator, explode_violations
 
 
 def annotate_stream(validator: SparkValidator, stream_df: DataFrame) -> DataFrame:
@@ -229,11 +229,7 @@ def foreach_batch_runner(validator: SparkValidator, out_dir: str,
     micro-batch (id-suffixed paths → idempotent re-runs)."""
 
     def _run(batch_df: DataFrame, epoch_id: int) -> None:
-        annotated = validator.annotate(batch_df)
-        keys = [F.col(k) for k in key_cols]
-        viol = annotated.select(*keys, F.explode("violations").alias("v")).select(
-            *keys, "v.*"
-        )
+        viol = explode_violations(validator.annotate(batch_df), list(key_cols))
         viol.write.mode("overwrite").parquet(f"{out_dir}/violations/epoch={epoch_id}")
 
     return _run

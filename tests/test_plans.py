@@ -208,3 +208,57 @@ def test_auto_bits_sizing():
     assert auto_bits(1) == 5                   # floor: log2(2)=1, +4
     for n in (100, 10_000, 1_000_000, 10**9):
         assert 2 ** auto_bits(n) >= 8 * n      # occupancy < 1/8 always
+
+
+def test_pass_fail_consumers_build_no_violations(spark, tmp_path, monkeypatch):
+    """``passed`` is the compiled fail predicate, so consumers that only
+    need pass/fail never build a violation: over the nested FIXTURES.md
+    §4 rule-set the optimized plans of ``counts()`` and ``validated()``
+    hold no ``transform``/``flatten`` and no violation struct, while
+    ``annotate()`` stays one Project over the scan."""
+    from test_rule_twins import NESTED_DDL, NESTED_SCHEMA, nested_rows
+
+    src = str(tmp_path / "nested")
+    spark.createDataFrame(nested_rows(200, seed=5), NESTED_DDL).write.parquet(src)
+    df = spark.read.parquet(src)
+    v = SparkValidator(NESTED_SCHEMA, key_cols=("row_id",))
+
+    # the frame counts() aggregates, captured where it is collected
+    frames = []
+    cls = type(df)
+    first = cls.first
+    monkeypatch.setattr(cls, "first",
+                        lambda self: frames.append(self) or first(self))
+    v.validate(df).counts()
+    assert len(frames) == 1
+    for frame in (frames[0], v.validated(df)):
+        plan = frame._jdf.queryExecution().optimizedPlan().toString()
+        for needle in ("transform(", "flatten(", "document_path"):
+            assert needle not in plan, f"{needle} found:\n{plan[:3000]}"
+
+    annotated = v.annotate(df)
+    plan = annotated._jdf.queryExecution().optimizedPlan()
+    assert plan.nodeName() == "Project"
+    assert plan.children().apply(0).nodeName() in ("Relation", "LogicalRelation")
+    assert "document_path" in plan.toString()  # the violations are there
+    assert_shuffle_free(annotated)
+
+
+def test_violations_frame_builds_each_array_once(spark, tmp_path):
+    """A plain ``explode(violations)`` makes Spark infer ``size(
+    violations) > 0`` below the generator and push the whole violation
+    expression into that Filter, building every row's array twice; the
+    violations frame filters after the generator instead."""
+    from cerberus_spark.plans.explain import optimized_plan
+
+    t, _ = synthesize(500, seed=42)
+    src = str(tmp_path / "t")
+    spark.createDataFrame(t).write.parquet(src)
+    res = SparkValidator(TURN_SCHEMA, key_cols=("conv_id", "turn_idx")).validate(
+        spark.read.parquet(src))
+    plan = optimized_plan(res.violations)
+    filters = [ln for ln in plan.splitlines()
+               if ln.lstrip("+-: ").startswith("Filter")]
+    assert filters and not any("size(" in ln for ln in filters), plan[:3000]
+    assert res.violations.count() == res.annotated.select(
+        F.sum(F.size("violations"))).first()[0]
