@@ -715,13 +715,13 @@ def _check_store_meta(spark, store_dir: str, k: int, num_perm: int,
                 f"layout would break probe-side pruning")
         return stored_bb, stored_hb
     elif create:
-        from ..plans.checkpoint import write_one_row
+        from ..plans.checkpoint import write_rows
         bb = 256 if band_buckets is None else band_buckets
         hb = 0 if hash_buckets is None else hash_buckets
-        write_one_row(spark, meta_path,
-                      "k int, num_perm int, bands int, band_buckets int, "
-                      "hash_buckets int",
-                      (k, num_perm, bands, bb, hb))
+        write_rows(spark, meta_path,
+                   "k int, num_perm int, bands int, band_buckets int, "
+                   "hash_buckets int",
+                   [(k, num_perm, bands, bb, hb)])
         return bb, hb
     else:
         raise ValueError(f"no band store at {store_dir} (missing meta)")
@@ -1229,8 +1229,8 @@ def compact_epoch_store(spark, store_dir: str, tables: tuple[str, ...],
              .write.mode("overwrite").parquet(f"{tmp}/{table}"))
     # the _SUCCESS of this one-row write IS the commit point: before
     # it, recovery rolls back; after it, recovery rolls forward
-    from ..plans.checkpoint import one_row_df
-    one_row_df(spark, "upto int", (int(upto),)) \
+    from ..plans.checkpoint import rows_df
+    rows_df(spark, "upto int", [(int(upto),)]) \
         .coalesce(1).write.mode("overwrite") \
         .parquet(f"{store_dir}/_compact")
     _compact_finalize(spark, store_dir, tables, upto)
@@ -1515,11 +1515,11 @@ def write_embedding_store(df: DataFrame, store_dir: str, epoch: int,
             if probe is None:
                 return  # nothing to store; meta pins on first real write
             dim = len(probe[0])
-        from ..plans.checkpoint import write_one_row
-        write_one_row(
+        from ..plans.checkpoint import write_rows
+        write_rows(
             spark, meta_path,
             "n_bits int, n_tables int, seed int, dim int, pb_buckets int",
-            (n_bits, n_tables, seed, dim, pb_buckets))
+            [(n_bits, n_tables, seed, dim, pb_buckets)])
     planes = [hyperplanes(dim, n_bits, seed + t) for t in range(n_tables)]
     rows = _emb_bucket_rows(df, id_col, emb_col, planes, dim, n_bits,
                             n_tables)

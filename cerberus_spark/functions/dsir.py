@@ -296,10 +296,10 @@ def write_dsir_model(target: DataFrame, raw: DataFrame, path: str,
     spark = target.sparkSession
     _bucket_totals(tf_).write.mode("overwrite").parquet(f"{path}/tc")
     _bucket_totals(rf).write.mode("overwrite").parquet(f"{path}/rc")
-    from ..plans.checkpoint import write_one_row
-    write_one_row(spark, f"{path}/meta",
-                  "n_buckets int, seed string, hash string",
-                  (n_buckets, seed, hash))
+    from ..plans.checkpoint import write_rows
+    write_rows(spark, f"{path}/meta",
+               "n_buckets int, seed string, hash string",
+               [(n_buckets, seed, hash)])
     spark.catalog.refreshByPath(path)
 
 

@@ -733,11 +733,11 @@ def build_pq_index(df: DataFrame, emb_col: str, id_col: str, path: str,
     # codes that pq_index_topk would silently decode as raw.  Built
     # from JVM literals — a createDataFrame one-row write pays a
     # Python-worker round-trip (~5 s on this sandbox).
-    from ..plans.checkpoint import write_one_row
+    from ..plans.checkpoint import write_rows
     spark = df.sparkSession
-    write_one_row(spark, f"{path}/meta",
-                  "m int, k int, n_cells int, residual boolean",
-                  (m, k, int(n_cells or 0), bool(residual)))
+    write_rows(spark, f"{path}/meta",
+               "m int, k int, n_cells int, residual boolean",
+               [(m, k, int(n_cells or 0), bool(residual))])
     coded = df.select(F.col(id_col), F.col(emb_col).alias("_e"))
     if n_cells:
         coded = coded.withColumn("cell", ivf_cell_udf(cent)(F.col("_e")))

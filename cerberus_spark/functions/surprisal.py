@@ -456,8 +456,8 @@ def write_ngram_model(train: DataFrame, path: str,
                 f.result()
     finally:
         kt.unpersist()
-    from ..plans.checkpoint import write_one_row
-    write_one_row(spark, f"{path}/meta", "order int", (order,))
+    from ..plans.checkpoint import write_rows
+    write_rows(spark, f"{path}/meta", "order int", [(order,)])
     spark.catalog.refreshByPath(path)
 
 

@@ -7,11 +7,13 @@ drift.  These operators add them Spark-first:
 
 * uniqueness        — one partial-aggregated groupBy (hot-key skew
                       bounded by map-side partial aggregation)
-* referential       — broadcast (or AQE-chosen) LEFT ANTI join
+* referential       — AQE-chosen LEFT ANTI join (broadcast is an opt-in
+                      switch)
 * ordering          — per-partition window (lag) monotonicity check
 * column stats      — one aggregation pass: null rate, HLL distinct,
-                      min/max, approximate quantiles (all map-side
-                      partial-agg + mergeable sketches)
+                      min/max, approximate quantiles (map-side partial
+                      aggregation; the result is final numbers, not
+                      sketches that later runs could merge)
 * drift             — categorical/histogram frequency profiles compared
                       by KL divergence and PSI against a baseline
 
@@ -257,15 +259,19 @@ def length_bucket(col: str, bucket_width: int = 100, n_buckets: int = 20) -> Col
     ).cast("string")
 
 
-def multi_profile(df: DataFrame, specs: list[tuple[str, Column | str]]) -> DataFrame:
-    """All requested frequency profiles in ONE scan: each row explodes
-    into one (key, bucket) struct per spec, a single groupBy counts
-    them, and freqs normalize per key over the tiny aggregated result.
-    Replaces one narrow source scan PER profile (3 scans → 1 for the
-    standard role/tool/text-length drift set)."""
-    from pyspark.sql import Window as W
+def drift_specs() -> list[tuple[str, Column | str]]:
+    """The standard drift profile set: role and tool frequency plus the
+    text-length histogram, as ``(key, expr)`` specs for
+    ``multi_profile``/``profile_entries``.  A function because a Column
+    needs a live session."""
+    return [("role", "role"), ("tool", "tool"),
+            ("text_len", length_bucket("text"))]
 
-    entries = F.array(*[
+
+def profile_entries(specs: list[tuple[str, Column | str]]) -> list[Column]:
+    """One ``(key, bucket)`` string struct per spec for a row, a NULL
+    bucket written as ``<null>``."""
+    return [
         F.struct(
             F.lit(key).alias("key"),
             F.coalesce(
@@ -274,9 +280,19 @@ def multi_profile(df: DataFrame, specs: list[tuple[str, Column | str]]) -> DataF
             ).alias("bucket"),
         )
         for key, expr in specs
-    ])
+    ]
+
+
+def multi_profile(df: DataFrame, specs: list[tuple[str, Column | str]]) -> DataFrame:
+    """All requested frequency profiles in ONE scan: each row explodes
+    into one (key, bucket) struct per spec, a single groupBy counts
+    them, and freqs normalize per key over the tiny aggregated result.
+    Replaces one narrow source scan PER profile (3 scans → 1 for the
+    standard role/tool/text-length drift set)."""
+    from pyspark.sql import Window as W
+
     counts = (
-        df.select(F.explode(entries).alias("e"))
+        df.select(F.explode(F.array(*profile_entries(specs))).alias("e"))
         .groupBy("e.key", "e.bucket")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -397,21 +413,3 @@ def stats_bound_violations(df: DataFrame, bounds: Mapping) -> DataFrame:
     return (spark.createDataFrame(out, E.VIOLATION_STRUCT) if out
             else spark.createDataFrame([], E.VIOLATION_STRUCT))
 
-
-def drift_violations(spark, metrics: list[dict], psi_threshold: float = 0.2) -> DataFrame:
-    """DRIFT_DETECTED (0x104) rows for profile keys whose PSI exceeds
-    the threshold (industry convention: 0.1 moderate, 0.2 major)."""
-    rows = [
-        {
-            "document_path": [m["key"]],
-            "schema_path": ["__dataset__", "drift"],
-            "code": E.DRIFT_DETECTED.code,
-            "rule": E.DRIFT_DETECTED.rule,
-            "constraint": f"psi<{psi_threshold}",
-            "value": f"psi={m['psi']:.6f}",
-            "info": f"kl={m['kl']:.6f}",
-        }
-        for m in metrics
-        if m["psi"] > psi_threshold
-    ]
-    return spark.createDataFrame(rows, E.VIOLATION_STRUCT) if rows else spark.createDataFrame([], E.VIOLATION_STRUCT)

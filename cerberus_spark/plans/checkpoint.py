@@ -20,10 +20,10 @@ All existence probes go through the Hadoop FileSystem API — os.path
 would silently return False for s3a://, hdfs://, abfs:// paths and
 quietly degrade resume to a full re-run.
 
-Small artifacts (checkpoint rows, per-partition summaries, one-row
-meta rows) are read and written driver-side with pyarrow when their
-filesystem is ``file:`` — a Spark job around a few KB costs ~0.1-0.8 s
-of pure scheduling — and through Spark everywhere else.
+Small artifacts (checkpoint rows, per-partition summaries, meta rows,
+the drift baseline) are read and written driver-side with pyarrow when
+their filesystem is ``file:`` — a Spark job around a few KB costs
+~0.1-0.8 s of pure scheduling — and through Spark everywhere else.
 ``_local_dir`` is the one place that picks the branch; every helper
 below owns both branches, so callers never carry a fallback.
 """
@@ -46,20 +46,24 @@ CHECKPOINT_SCHEMA = (
 )
 
 
-def one_row_df(spark: SparkSession, schema: str, values):
-    """One-row DataFrame of scalar literals built JVM-side
-    (``spark.range(1)`` + casts).  ``createDataFrame`` on local rows
-    parallelizes a PICKLED Python partition, so every action on it —
-    even writing a one-row store-meta artifact — pays a Python worker
-    round-trip: measured 5.7 s vs 0.3 s for the band-store meta row on
-    this sandbox.  Scalar columns only (int/long/double/string/
-    boolean); the cast pins each column to exactly the type the schema
-    string names, so readers see the identical parquet schema."""
-    cols = []
-    for spec, v in zip(schema.split(","), values):
-        name, typ = spec.strip().split(None, 1)
-        cols.append(F.lit(v).cast(typ).alias(name))
-    return spark.range(1).select(*cols)
+def rows_df(spark: SparkSession, schema: str, rows):
+    """DataFrame of scalar literal ``rows`` (tuples in ``schema``
+    order) built JVM-side (``spark.range`` + casts + ``inline``).
+    ``createDataFrame`` on local rows parallelizes a PICKLED Python
+    partition, so every action on it — even writing a one-row
+    store-meta artifact — pays a Python worker round-trip: measured
+    5.7 s vs 0.3 s for the band-store meta row on this sandbox.  Scalar
+    columns only (int/long/double/string/boolean); the cast pins each
+    column to exactly the type the schema string names, so readers see
+    the identical parquet schema."""
+    fields = [spec.strip().split(None, 1) for spec in schema.split(",")]
+    if not rows:
+        return spark.range(0).select(
+            *[F.lit(None).cast(t).alias(n) for n, t in fields])
+    return spark.range(1).select(F.inline(F.array(*[
+        F.struct(*[F.lit(v).cast(t).alias(n)
+                   for (n, t), v in zip(fields, row)])
+        for row in rows])))
 
 
 def _fs(spark: SparkSession, path: str):
@@ -168,15 +172,16 @@ def read_one_row(spark: SparkSession, path: str,
     return rows[0] if rows else None
 
 
-def write_one_row(spark: SparkSession, path: str, schema: str,
-                  values) -> None:
-    """Write a ONE-ROW parquet artifact (store/model meta rows) with
-    the exact column types the DDL ``schema`` names, replacing any
-    previous artifact at ``path``.
+def write_rows(spark: SparkSession, path: str, schema: str,
+               rows) -> None:
+    """Write a SMALL parquet artifact (store/model meta rows, a drift
+    baseline) of ``rows`` (tuples in ``schema`` order) with the exact
+    column types the DDL ``schema`` names, replacing any previous
+    artifact at ``path``.
 
-    On ``file:`` the row is written driver-side with pyarrow (a Spark
-    job for one row costs ~0.12 s of pure scheduling) — the file
-    parquet-identical in schema to the ``one_row_df`` Spark write, so
+    On ``file:`` the rows are written driver-side with pyarrow (a Spark
+    job for a few rows costs ~0.12 s of pure scheduling) — the file
+    parquet-identical in schema to the ``rows_df`` Spark write, so
     either reader works on either artifact.  Other schemes and types
     outside the scalar set take the Spark write.  NOT for commit
     markers: those rely on the Spark committer's ``_SUCCESS`` as the
@@ -186,12 +191,12 @@ def write_one_row(spark: SparkSession, path: str, schema: str,
     fields = _arrow_fields(schema)
     local = _local_dir(spark, path)
     if local is None or any(t is None for _, t in fields):
-        one_row_df(spark, schema, values) \
+        rows_df(spark, schema, rows) \
             .coalesce(1).write.mode("overwrite").parquet(path)
         return
     fs_delete(spark, path)
-    table = pa.table({n: pa.array([v], type=t)
-                      for (n, t), v in zip(fields, values)})
+    table = pa.table({n: pa.array([row[i] for row in rows], type=t)
+                      for i, (n, t) in enumerate(fields)})
     _write_local_parquet(local, table, "part-00000.parquet")
 
 

@@ -4,18 +4,18 @@ checkpointed, resumable writes.  This is the job `spark-submit` runs.
 One pass over the transcripts table computes (north star):
 
 1. per-turn rule violations + normalized columns  (single projection)
-2. per-partition pass/fail summary                (one groupBy)
+2. per-partition pass/fail totals + drift profile (one groupBy)
 3. uniqueness of (conv_id, turn_idx)              (partial-aggregated groupBy)
 4. referential conv_id ⋉ conversations            (anti join, AQE-chosen)
-5. ts-ordering per conversation                   (window after
-                                                   repartition(conv_id))
-6. role/tool frequency + text-length drift vs a checkpointed baseline
-   (KL + PSI on small aggregated profiles)
+5. ts-ordering per conversation                   (window on conv_id)
+6. role/tool/text-length drift vs a checkpointed baseline (KL + PSI),
+   folded on the driver from the summary rows after the last wave
 6b. (optional, ``RunConfig.sequence_rules``) conversation-sequence
    grammar — first-role / role-transitions / turn_idx contiguity / ts
    monotonicity in one window pass (operators/sequence.py)
-7. checkpoint commit with lineage (snapshot, rule-schema hash) so a
-   killed job restarts only unvalidated partitions
+7. checkpoint commit per wave with lineage (snapshot, rule-schema
+   hash, predicate set incl. the drift spec) so a killed job restarts
+   only unvalidated partitions
 
 Resume correctness invariants:
 
@@ -37,10 +37,13 @@ Resume correctness invariants:
 * in-memory inputs have no stable lineage (snapshot_id() → None):
   resume is disabled for them and commits carry an ephemeral id that
   can never match a future run.
-* dataset-level checks (uniqueness/referential/ordering/drift) are
-  GLOBAL invariants — they always run over the full input (a
-  partition-pruned uniqueness check would be wrong) and their sinks are
-  plain overwrites.
+* dataset-level checks (uniqueness/referential/ordering) are GLOBAL
+  invariants — they always run over the full input (a partition-pruned
+  uniqueness check would be wrong) and their sink is a plain overwrite.
+* drift is global too, but its per-partition profile rows are durable
+  summary rows: a resumed run merges the committed partitions' rows
+  with its own and rescans nothing.  The baseline is written only after
+  every wave has committed, so a failed or killed run never leaves one.
 """
 
 from __future__ import annotations
@@ -48,7 +51,8 @@ from __future__ import annotations
 import hashlib
 import json
 import uuid
-from dataclasses import dataclass, field
+from collections import Counter
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -56,7 +60,8 @@ from . import errors as E
 from .engine import SparkValidator, explode_violations
 from .operators import dataset as D
 from .plans.checkpoint import (CheckpointStore, fs_delete, fs_exists,
-                               part_id_col, read_rows, snapshot_id)
+                               part_id_col, read_rows, rows_df, snapshot_id,
+                               write_rows)
 
 
 @dataclass
@@ -67,28 +72,17 @@ class RunConfig:
     conv_col: str = "conv_id"
     order_col: str = "turn_idx"
     ts_col: str = "ts"
-    psi_threshold: float = 0.2
-    write_annotated: bool = False
     resume: bool = True
     #: checkpoint granularity: partitions are processed in this many
     #: waves, each wave's checkpoint rows committed once its outputs are
     #: durable.  1 = single pass (minimum scans); raise it when restart
     #: cost dominates re-scan cost (very long jobs on flaky clusters).
     waves: int = 1
-    # Caching the annotated frame is a pessimization here: materializing
-    # 6M+ rows of array<struct> into the object cache measured ~25x the
-    # cost of recomputing the codegen projection from the columnar scan,
-    # and a cached plan defeats column pruning for the narrow dataset
-    # checks (uniqueness needs 2 columns, ordering 3).  Set True only
-    # when the input scan itself is the expensive part AND executors
-    # have cache headroom.
-    persist: bool = False
     #: optional conversation-sequence grammar (operators/sequence.py
     #: kwargs: first_roles / transitions / contiguous / monotone_ts /
     #: order_tie).  None (default) skips the check; when set, sequence
     #: violations join the dataset-violations sink and the report.
     sequence_rules: dict | None = None
-    extra: dict = field(default_factory=dict)
 
 
 @dataclass
@@ -106,12 +100,12 @@ class RunReport:
 
 class ValidationRun:
     def __init__(self, schema: dict, config: RunConfig, **validator_kw):
-        # part_id is engine plumbing, not document data: declaring it a key
-        # column keeps it out of unknown-field validation and purge
-        # (otherwise allow_unknown=False would flag it on every row).
+        # part_id and _drift are engine plumbing, not document data:
+        # declaring them key columns keeps them out of unknown-field
+        # validation and purge (otherwise allow_unknown=False would flag
+        # them on every row), and normalization never rewrites them.
         key_cols = tuple(config.key_cols)
-        if "part_id" not in key_cols:
-            key_cols = key_cols + ("part_id",)
+        key_cols += tuple(c for c in ("part_id", "_drift") if c not in key_cols)
         self.validator = SparkValidator(schema, key_cols=key_cols, **validator_kw)
         self.config = config
 
@@ -130,11 +124,21 @@ class ValidationRun:
             # no stable lineage: never resumable, never matched by a later run
             snap = f"ephemeral-{uuid.uuid4().hex[:12]}"
         shash = self.validator.schema_hash
+        # The drift profile rides the wave summary: ``_drift`` holds one
+        # (key, bucket) struct per drift spec, read from the RAW input
+        # columns, plus one NULL-key entry whose summary rows carry the
+        # per-partition totals.
+        null = F.lit(None).cast("string")
+        drift_col = F.array(*D.profile_entries(D.drift_specs()),
+                            F.struct(null.alias("key"), null.alias("bucket")))
         # lineage: the predicate set identifies WHAT this run checks, so a
-        # config change (e.g. different key columns) invalidates resume state
+        # config change (e.g. different key columns) invalidates resume
+        # state; the drift spec pins the summary layout, so summaries of
+        # another layout are never resumed from
         predicate_set = json.dumps(
             {"keys": list(cfg.key_cols), "conv": cfg.conv_col,
-             "order": cfg.order_col, "ts": cfg.ts_col, "n_parts": cfg.n_parts},
+             "order": cfg.order_col, "ts": cfg.ts_col, "n_parts": cfg.n_parts,
+             "drift": str(drift_col)},
             sort_keys=True,
         )
 
@@ -155,52 +159,35 @@ class ValidationRun:
             f"{snap}|{shash}|{predicate_set}".encode()
         ).hexdigest()[:16]
         if not done:
-            for sub in ("summary", "violations", "annotated"):
+            for sub in ("summary", "violations"):
                 fs_delete(spark, self._path(sub))
 
-        # The three pipelines below are independent DAGs (the dataset
-        # checks and drift read the raw input, not the wave outputs).
-        # Submitting them from separate driver threads lets the
-        # scheduler overlap their jobs: at bench scale each job is
-        # sub-second of compute behind ~0.5 s of fixed scheduling +
-        # parquet-commit overhead, so sequential submission made the
-        # orchestration — not the compute — the wall clock (6.6 s vs a
-        # 0.32 s compute phase).  On a real cluster the same overlap
+        # The two pipelines below are independent DAGs (the dataset
+        # checks read the raw input, not the wave outputs).  Submitting
+        # them from separate driver threads lets the scheduler overlap
+        # their jobs: at bench scale each job is sub-second of compute
+        # behind ~0.5 s of fixed scheduling + parquet-commit overhead,
+        # so sequential submission made the orchestration — not the
+        # compute — the wall clock.  On a real cluster the same overlap
         # hides the small jobs' latency behind the big scan.
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=3) as pool:
+        with ThreadPoolExecutor(max_workers=2) as pool:
             fut_waves = pool.submit(
-                self._run_validation_waves, df, done, pending, store, snap,
-                shash, predicate_set, lineage,
+                self._run_validation_waves, df.withColumn("_drift", drift_col),
+                done, pending, store, snap, shash, predicate_set, lineage,
             ) if pending else None
             fut_ds = pool.submit(self._run_dataset_checks, spark, df, conversations)
-            fut_drift = pool.submit(self._run_drift, spark, df)
-            try:
-                if fut_waves is not None:
-                    fut_waves.result()
-                # fully resumed: zero writes — prior results stay durable
-            except BaseException:
-                # A failed run must not COMMIT a drift baseline: later
-                # runs would silently compare against the profile of an
-                # input that never validated (r4 ADVICE).  The drift
-                # thread runs concurrently, so roll back its first-run
-                # baseline write rather than trying to prevent it.
-                try:
-                    _, wrote_baseline = fut_drift.result()
-                except Exception:
-                    wrote_baseline = False
-                if wrote_baseline:
-                    fs_delete(spark, self._path("baseline_stats"))
-                raise
+            if fut_waves is not None:
+                fut_waves.result()
+            # fully resumed: zero writes — prior results stay durable
             ds_counts = fut_ds.result()
-            drift, _ = fut_drift.result()
 
-        # -- report from the durable summary (covers all partitions,
-        # this run's and previously committed ones alike)
+        # -- report and drift from the durable summary (covers all
+        # partitions, this run's and previously committed ones alike)
         rows = self._summary_rows(spark, lineage)
         n_turns, n_failed, n_viol = (
-            sum(r[c] or 0 for r in rows)
+            sum(r[c] or 0 for r in rows if r["key"] is None)
             for c in ("n_rows", "n_failed", "n_violations"))
         return RunReport(
             n_turns=n_turns,
@@ -209,7 +196,7 @@ class ValidationRun:
             n_unique_violations=ds_counts.get(E.NOT_UNIQUE.code, 0),
             n_orphan_violations=ds_counts.get(E.ORPHAN_REFERENCE.code, 0),
             n_ordering_violations=ds_counts.get(E.ORDERING_VIOLATION.code, 0),
-            drift=drift,
+            drift=self._drift(spark, rows),
             skipped_partitions=len(done),
             n_sequence_violations=ds_counts.get(E.SEQUENCE_VIOLATION.code, 0),
         )
@@ -239,6 +226,7 @@ class ValidationRun:
         # (its waves carry rows only for never-committed — empty —
         # partitions, and the dynamic path writes nothing for them).
         single_fresh = not done and len(waves) == 1
+        keys = list(cfg.key_cols)
 
         for wave_parts in waves:
             # prune to this wave's partitions; on a file source the
@@ -251,93 +239,91 @@ class ValidationRun:
                 wave_df = df
 
             annotated = self.validator.annotate(wave_df)
-            if cfg.persist:
-                annotated.persist()
-            try:
-                keys = list(cfg.key_cols)
 
-                # rule violations (first evaluation of the projection).
-                # Repartition on part_id before the partitioned write:
-                # without it every scan task opens a writer per part dir
-                # (tasks × n_parts small files — measured 7× the CPU at 32
-                # cores); with it each output partition is written by ~1
-                # task.  Violations are a small fraction of input rows, so
-                # this shuffle is cheap; add a second key if one partition's
-                # violations ever outgrow a task.
-                viol = explode_violations(annotated, keys + ["part_id"])
+            # rule violations (first evaluation of the projection).
+            # Repartition on part_id before the partitioned write:
+            # without it every scan task opens a writer per part dir
+            # (tasks × n_parts small files — measured 7× the CPU at 32
+            # cores); with it each output partition is written by ~1
+            # task.  Violations are a small fraction of input rows, so
+            # this shuffle is cheap; add a second key if one partition's
+            # violations ever outgrow a task.
+            viol = explode_violations(annotated, keys + ["part_id"])
 
-                def _write_violations():
-                    if single_fresh:
-                        # no repartition either: the flat write streams
-                        # straight from the scan tasks (the exchange
-                        # existed to align tasks with part dirs)
-                        viol.write.mode("overwrite").parquet(
-                            self._path("violations"))
-                        return
-                    (viol.repartition("part_id")
-                         .write.mode("overwrite")
-                         .option("partitionOverwriteMode", "dynamic")
-                         .partitionBy("part_id")
-                         .parquet(self._path("violations")))
+            def _write_violations():
+                if single_fresh:
+                    # no repartition either: the flat write streams
+                    # straight from the scan tasks (the exchange
+                    # existed to align tasks with part dirs)
+                    viol.write.mode("overwrite").parquet(
+                        self._path("violations"))
+                    return
+                (viol.repartition("part_id")
+                     .write.mode("overwrite")
+                     .option("partitionOverwriteMode", "dynamic")
+                     .partitionBy("part_id")
+                     .parquet(self._path("violations")))
 
-                # per-partition summary (second and last evaluation —
-                # failed ROWS can't be recovered from the violations table
-                # alone because (conv_id, turn_idx) keys are not unique;
-                # that's what the uniqueness check finds)
-                summary = annotated.groupBy("part_id").agg(
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.sum((~F.col("passed")).cast("long")).alias("n_failed"),
-                    F.sum(F.size("violations").cast("long")).alias("n_violations"),
-                ).withColumn("lineage", F.lit(lineage))
+            # per-partition summary (second and last evaluation —
+            # failed ROWS can't be recovered from the violations table
+            # alone because (conv_id, turn_idx) keys are not unique;
+            # that's what the uniqueness check finds).  Each row
+            # explodes into its ``_drift`` entries: the NULL-key rows
+            # count the partition's rows, failed rows and violations;
+            # the profile rows count (key, bucket) and leave n_failed /
+            # n_violations NULL (fewer bytes).
+            totals = F.col("key").isNull()
+            summary = annotated.select(
+                "part_id",
+                (~F.col("passed")).cast("long").alias("_failed"),
+                F.size("violations").cast("long").alias("_n_viol"),
+                F.inline("_drift"),
+            ).groupBy("part_id", "key", "bucket").agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.sum(F.when(totals, F.col("_failed"))).alias("n_failed"),
+                F.sum(F.when(totals, F.col("_n_viol"))).alias("n_violations"),
+            ).withColumn("lineage", F.lit(lineage))
 
-                def _write_summary():
-                    if single_fresh:
-                        summary.write.mode("overwrite").parquet(
-                            self._path("summary"))
-                        return
-                    (summary.write.mode("overwrite")
-                            .option("partitionOverwriteMode", "dynamic")
-                            .partitionBy("part_id")
-                            .parquet(self._path("summary")))
+            def _write_summary():
+                if single_fresh:
+                    summary.write.mode("overwrite").parquet(
+                        self._path("summary"))
+                    return
+                (summary.write.mode("overwrite")
+                        .option("partitionOverwriteMode", "dynamic")
+                        .partitionBy("part_id")
+                        .parquet(self._path("summary")))
 
-                # the two writes are independent evaluations of the same
-                # projection — overlap them; the checkpoint commit below
-                # waits for BOTH (committed state must describe durable
-                # violations AND summary)
-                from concurrent.futures import ThreadPoolExecutor as _TPE
-                with _TPE(max_workers=2) as wpool:
-                    fv = wpool.submit(_write_violations)
-                    fs = wpool.submit(_write_summary)
-                    fv.result()
-                    fs.result()
+            # the two writes are independent evaluations of the same
+            # projection — overlap them; the checkpoint commit below
+            # waits for BOTH (committed state must describe durable
+            # violations AND summary)
+            from concurrent.futures import ThreadPoolExecutor as _TPE
+            with _TPE(max_workers=2) as wpool:
+                fv = wpool.submit(_write_violations)
+                fs = wpool.submit(_write_summary)
+                fv.result()
+                fs.result()
 
-                if cfg.write_annotated:
-                    (annotated.repartition("part_id")
-                              .write.mode("overwrite")
-                              .option("partitionOverwriteMode", "dynamic")
-                              .partitionBy("part_id")
-                              .parquet(self._path("annotated")))
-
-                # checkpoint commit for THIS wave, from the durable files —
-                # committed state always describes data that is on disk.
-                # A wave with zero rows writes no summary rows; nothing
-                # to commit (the empty partitions cost nothing to
-                # revisit).
-                rows = self._summary_rows(spark, lineage, set(wave_parts))
-                if rows:
-                    store.commit_rows(rows, snap, shash, predicate_set)
-            finally:
-                if cfg.persist:
-                    annotated.unpersist()
+            # checkpoint commit for THIS wave, from the durable files —
+            # committed state always describes data that is on disk.
+            # A wave with zero rows writes no summary rows; nothing
+            # to commit (the empty partitions cost nothing to
+            # revisit).
+            rows = [r for r in self._summary_rows(spark, lineage, set(wave_parts))
+                    if r["key"] is None]
+            if rows:
+                store.commit_rows(rows, snap, shash, predicate_set)
 
     def _summary_rows(self, spark, lineage, part_ids=None) -> list[dict]:
         """The durable summary's rows stamped with ``lineage`` (only
-        those of ``part_ids`` when given) — ≤ n_parts rows, read
-        driver-side on ``file:`` (``read_rows``).  A summary written before the lineage
+        those of ``part_ids`` when given) — ≤ n_parts totals rows (NULL
+        ``key``) plus their drift profile rows, read driver-side on
+        ``file:`` (``read_rows``).  A summary written before the lineage
         column existed reads it as None and counts as this lineage."""
         rows = read_rows(spark, self._path("summary"),
-                         ["part_id", "lineage", "n_rows", "n_failed",
-                          "n_violations"])
+                         ["part_id", "lineage", "key", "bucket", "n_rows",
+                          "n_failed", "n_violations"])
         return [r for r in rows
                 if r["lineage"] in (lineage, None)
                 and (part_ids is None or r["part_id"] in part_ids)]
@@ -387,25 +373,29 @@ class ValidationRun:
         got = obs.get
         return {c: int(got[name] or 0) for name, c in codes.items()}
 
-    def _run_drift(self, spark, df) -> tuple:
-        """Returns (drift_metrics, wrote_baseline).  The bool lets
-        ``execute`` roll the first-run baseline write back when the
-        validation waves fail — a committed baseline from a failed run
-        would poison every later run's drift comparison."""
-        cfg = self.config
-        # one scan computes all three profiles (role/tool frequency +
-        # text-length histogram) — at 100 TB each avoided pass matters
-        profiles = D.multi_profile(df, [
-            ("role", "role"),
-            ("tool", "tool"),
-            ("text_len", D.length_bucket("text")),
-        ])
+    def _drift(self, spark, rows) -> list[dict]:
+        """KL/PSI of the drift profile folded from the summary ``rows``
+        (every partition of this lineage) against ``baseline_stats``.
+        Without a baseline, this profile is written as the baseline
+        (driver-side on ``file:``, ``write_rows``) and the result is
+        []: called only after the last wave has committed, so a failed
+        or killed run never leaves a baseline behind."""
+        counts = Counter()
+        for r in rows:
+            if r["key"] is not None:
+                counts[r["key"], r["bucket"]] += r["n_rows"]
+        per_key = Counter()
+        for (key, _), n in counts.items():
+            per_key[key] += n
+        profile = [(key, bucket, n / per_key[key])
+                   for (key, bucket), n in sorted(counts.items())]
+        schema = "key string, bucket string, freq double"
         baseline_path = self._path("baseline_stats")
         if fs_exists(spark, baseline_path):
-            baseline = spark.read.parquet(baseline_path)
-            return D.drift_metrics(profiles, baseline), False
-        profiles.write.mode("overwrite").parquet(baseline_path)
-        return [], True
+            return D.drift_metrics(rows_df(spark, schema, profile),
+                                   spark.read.parquet(baseline_path))
+        write_rows(spark, baseline_path, schema, profile)
+        return []
 
 
 def main():  # pragma: no cover — spark-submit entry point

@@ -365,16 +365,17 @@ def drift_foreach_batch(out_dir: str, specs: list | None = None,
     The baseline resolves, in order: the ``baseline`` frame passed in, a
     previously persisted ``{out_dir}/drift_baseline`` dir, else the
     FIRST batch's own profiles (persisted for every later batch) — the
-    streaming analog of ``ValidationRun._run_drift``'s
-    first-run-writes-baseline behavior.  Per-epoch metrics land at
-    ``{out_dir}/drift_metrics/epoch=N`` (idempotent overwrite)."""
+    streaming analog of ``ValidationRun``'s first-run-writes-baseline
+    behavior.  ``specs`` defaults to ``drift_specs()``, the profile set
+    ``ValidationRun`` folds from its wave summary.  Per-epoch metrics
+    land at ``{out_dir}/drift_metrics/epoch=N`` (idempotent
+    overwrite)."""
     from pyspark.sql import functions as SF
 
     from ..operators import dataset as D
     from ..plans.checkpoint import fs_exists
 
-    specs = specs or [("role", "role"), ("tool", "tool"),
-                      ("text_len", D.length_bucket("text"))]
+    specs = specs or D.drift_specs()
     base_path = f"{out_dir}/drift_baseline"
 
     def _run(batch_df: DataFrame, epoch_id: int) -> None:

@@ -3,7 +3,7 @@ branches: driver-side pyarrow on ``file:`` and Spark elsewhere."""
 
 from cerberus_spark.plans import checkpoint
 from cerberus_spark.plans.checkpoint import (CheckpointStore, read_one_row,
-                                             write_one_row)
+                                             write_rows)
 
 #: the branch decision that reads the other branch's artifacts
 _OTHER_BRANCH = {"local": lambda spark, path: None,
@@ -40,7 +40,7 @@ def test_one_row_meta_reads_identically_across_io_branches(
     values = (3, 2**40 + 1, 0.25, "minhash", True)
     want = dict(zip(["k", "seed", "ratio", "name", "residual"], values))
     path = str(tmp_path / "meta")
-    write_one_row(spark, path, schema, values)
+    write_rows(spark, path, schema, [values])
     assert read_one_row(spark, path) == want
 
     monkeypatch.setattr(checkpoint, "_local_dir", _OTHER_BRANCH[io_branch])

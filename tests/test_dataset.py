@@ -1,5 +1,6 @@
 """Dataset-level constraint operators + the full checkpointed run."""
 
+import dataclasses
 import shutil
 import tempfile
 
@@ -135,9 +136,11 @@ def test_waves_commit_incrementally(spark, io_branch):
         assert r_waved.n_failed == r_single.n_failed
         assert r_waved.n_rule_violations == r_single.n_rule_violations
         # one checkpoint row per non-empty partition, committed 'done'
+        # (the summary holds a totals row plus drift profile rows per
+        # partition, so count its distinct part_ids)
         ckpt = spark.read.parquet(out2 + "/checkpoint")
         assert ckpt.filter("status = 'done'").count() == \
-            spark.read.parquet(out2 + "/summary").count()
+            spark.read.parquet(out2 + "/summary").select("part_id").distinct().count()
         # a resumed run over the waved output skips everything
         r_resume = ValidationRun(
             TURN_SCHEMA, RunConfig(out_dir=out2, n_parts=8, waves=4)
@@ -355,6 +358,121 @@ def test_failed_waves_do_not_commit_drift_baseline(spark):
     finally:
         shutil.rmtree(data_dir, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
+
+
+
+def _baseline_rows(spark, out):
+    return sorted(tuple(r) for r in spark.read.parquet(out + "/baseline_stats").collect())
+
+
+@pytest.mark.parametrize("k", [1, 2, 3])
+def test_drift_after_failed_run_equals_fresh(spark, io_branch, tmp_path,
+                                             monkeypatch, k):
+    """A waves=4 run that fails after its k-th wave commit leaves no
+    drift baseline.  Its resumed run merges the committed partitions'
+    profile rows with its own, so its drift and baseline equal a fresh
+    run's, and so does a later run's drift against that baseline."""
+    import os
+
+    from cerberus_spark.plans.checkpoint import CheckpointStore
+    from cerberus_spark.sources.transcripts import write_dataset, load
+
+    write_dataset(str(tmp_path / "d1"), 600, seed=7)
+    write_dataset(str(tmp_path / "d2"), 600, seed=7, drift=True)
+    t1, c1 = load(spark, str(tmp_path / "d1"))
+    t2, c2 = load(spark, str(tmp_path / "d2"))
+    fresh, failed = str(tmp_path / "fresh"), str(tmp_path / "failed")
+
+    def run(out, t, c):
+        return ValidationRun(
+            TURN_SCHEMA, RunConfig(out_dir=out, n_parts=8, waves=4)).execute(t, c)
+
+    commit = CheckpointStore.commit_rows
+    calls = []
+
+    def commit_then_fail(self, *a, **kw):
+        commit(self, *a, **kw)
+        calls.append(1)
+        if len(calls) == k:
+            raise RuntimeError("forced failure after a wave commit")
+
+    monkeypatch.setattr(CheckpointStore, "commit_rows", commit_then_fail)
+    with pytest.raises(RuntimeError, match="forced failure"):
+        run(failed, t1, c1)
+    monkeypatch.setattr(CheckpointStore, "commit_rows", commit)
+    assert not os.path.exists(failed + "/baseline_stats")
+
+    r_fresh, r_resumed = run(fresh, t1, c1), run(failed, t1, c1)
+    assert r_resumed.skipped_partitions > 0
+    assert r_resumed == dataclasses.replace(
+        r_fresh, skipped_partitions=r_resumed.skipped_partitions)
+    assert r_fresh.drift == []
+    assert _baseline_rows(spark, failed) == _baseline_rows(spark, fresh)
+    # a drifted input compared against each baseline
+    d_fresh, d_resumed = run(fresh, t2, c2).drift, run(failed, t2, c2).drift
+    assert d_resumed == d_fresh
+    assert {m["key"] for m in d_fresh} == {"role", "tool", "text_len"}
+    assert max(m["psi"] for m in d_fresh) > 0.2
+
+
+def test_no_baseline_at_any_wave_commit(spark, io_branch, tmp_path,
+                                        monkeypatch):
+    """The drift baseline is written only after the last wave has
+    committed: no wave commit of a first run ever sees one."""
+    import os
+
+    from cerberus_spark.plans.checkpoint import CheckpointStore
+    from cerberus_spark.sources.transcripts import write_dataset, load
+
+    write_dataset(str(tmp_path / "data"), 600, seed=7)
+    t, c = load(spark, str(tmp_path / "data"))
+    out = str(tmp_path / "out")
+    commit = CheckpointStore.commit_rows
+    seen = []
+
+    def spy(self, *a, **kw):
+        seen.append(os.path.exists(out + "/baseline_stats"))
+        commit(self, *a, **kw)
+
+    monkeypatch.setattr(CheckpointStore, "commit_rows", spy)
+    r = ValidationRun(TURN_SCHEMA, RunConfig(out_dir=out, n_parts=8,
+                                             waves=4)).execute(t, c)
+    assert seen == [False] * 4
+    assert r.drift == [] and os.path.exists(out + "/baseline_stats")
+
+
+def test_old_layout_checkpoint_is_not_resumed(spark, io_branch, tmp_path):
+    """A checkpoint whose summary has the old one-row-per-partition
+    layout (no key/bucket columns) carries another predicate set, so
+    the next run does not resume from it and reports correct totals."""
+    import json
+
+    from cerberus_spark.plans.checkpoint import CheckpointStore, snapshot_id
+    from cerberus_spark.sources.transcripts import write_dataset, load
+
+    write_dataset(str(tmp_path / "data"), 600, seed=7)
+    t, c = load(spark, str(tmp_path / "data"))
+    out = str(tmp_path / "out")
+    cfg = RunConfig(out_dir=out, n_parts=8)
+    run = ValidationRun(TURN_SCHEMA, cfg)
+    old_predicates = json.dumps(
+        {"keys": list(cfg.key_cols), "conv": cfg.conv_col,
+         "order": cfg.order_col, "ts": cfg.ts_col, "n_parts": cfg.n_parts},
+        sort_keys=True)
+    old_rows = [{"part_id": p, "n_rows": 1, "n_failed": 1, "n_violations": 1}
+                for p in range(8)]
+    spark.createDataFrame(
+        [(p, 1, 1, 1, None) for p in range(8)],
+        "part_id int, n_rows long, n_failed long, n_violations long, "
+        "lineage string").write.parquet(out + "/summary")
+    CheckpointStore(spark, out + "/checkpoint").commit_rows(
+        old_rows, snapshot_id(t), run.validator.schema_hash, old_predicates)
+
+    r = run.execute(t, c)
+    fresh = ValidationRun(TURN_SCHEMA, RunConfig(
+        out_dir=str(tmp_path / "fresh"), n_parts=8)).execute(t, c)
+    assert r.skipped_partitions == 0
+    assert r == fresh and r.n_turns == 600
 
 
 def test_rollup_profile_matches_duckdb(spark):

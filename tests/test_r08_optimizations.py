@@ -5,7 +5,7 @@ semantics on the edges they reasoned about.
   regex-metachar terms, whitespace-containing terms (never a token),
   uppercase terms (tokens are lowercased, so never matched), and
   all-unmatchable term lists.
-* one_row_df writes the identical parquet schema the createDataFrame
+* rows_df (one row) writes the identical parquet schema the createDataFrame
   path wrote (the store-meta readers depend on it).
 * repetition's tuple-keyed top-gram counting still tie-breaks by the
   JOINED-STRING byte order — which differs from tuple order when a
@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from cerberus_spark.functions import ranking as RK
 from cerberus_spark.functions import repetition as REP
-from cerberus_spark.plans.checkpoint import one_row_df
+from cerberus_spark.plans.checkpoint import rows_df
 
 _WS = re.compile(r"\s+", re.ASCII)
 
@@ -69,7 +69,7 @@ def test_bm25_all_unmatchable_terms_empty(spark):
 def test_one_row_df_matches_createdataframe_schema(spark, tmp_path):
     schema = "k int, num_perm int, name string, frac double, flag boolean"
     vals = (3, 32, "abc", 0.5, True)
-    a = one_row_df(spark, schema, vals)
+    a = rows_df(spark, schema, [vals])
     b = spark.createDataFrame([vals], schema)
     # names + datatypes must match exactly; nullability intentionally
     # differs (literal columns are non-nullable — strictly tighter,
