@@ -127,7 +127,7 @@ class SparkValidator:
     (validator.py:142-191): ``allow_unknown``, ``require_all``,
     ``update``, ``purge_unknown``, ``ignore_none_values`` — plus
     engine-specific knobs (``key_cols``, ``null_semantics``,
-    ``regex_engine``).
+    ``dynamic_types``, ``logical_child_errors``, ``on_key_collision``).
 
     ``ignore_none_values`` mirrors the reference knob (validator.py:146,
     478-487): None values are skipped by every rule and count as MISSING
@@ -162,7 +162,6 @@ class SparkValidator:
         rename_handler=None,
         null_semantics: str = "absent",
         ignore_none_values: bool = False,
-        regex_engine: str = "auto",
         dynamic_types: bool = False,
         logical_child_errors: bool = False,
         check_with: Mapping | None = None,
@@ -194,7 +193,6 @@ class SparkValidator:
             require_all=require_all,
             allow_unknown=allow_unknown,
             update=update,
-            regex_engine=regex_engine,
             dynamic_types=dynamic_types,
             logical_child_errors=logical_child_errors,
             check_with_registry=dict(check_with or {}),

@@ -181,37 +181,6 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature(text: Column, num_perm: int = 32, k: int = 3) -> Column:
-    """num_perm-wide MinHash signature: permutation i is simulated by
-    xxhash64(shingle, i); min over shingles.  Pure Column algebra.
-
-    Built as ONE ``transform(sequence(...))`` expression — a Python loop
-    of per-permutation columns would clone the whole shingle
-    subexpression num_perm times (projection collapse does not CSE it),
-    exploding codegen size and analysis time."""
-    sh = shingles(text, k)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_perm - 1)),
-        lambda i: F.array_min(F.transform(sh, lambda s: F.xxhash64(s, i))),
-    )
-
-
-def minhash_signature_df(df: DataFrame, id_col: str, text_col: str,
-                         num_perm: int = 32, k: int = 3) -> DataFrame:
-    """(id, _h0.._hN) MinHash signature via explode → per-permutation
-    min aggregation — the scalable shape: shingles materialize exactly
-    once, map-side partial min keeps the single shuffle tiny.  (An
-    array-of-lambdas formulation re-evaluates the shingle array per
-    permutation per row — measured 4-5× slower.)
-
-    Permutation i hashes the PRE-HASHED 64-bit shingle value —
-    xxhash64(xxhash64(shingle), i) — so the variable-length string is
-    hashed once and each of the num_perm permutations mixes 8 fixed
-    bytes, instead of re-hashing the string num_perm times (the
-    dominant cost at ~20 chars/shingle × 32 permutations)."""
-    return _sig_from_sh64(_sh64_df(df, id_col, text_col, k), num_perm)
-
-
 def shingles_udf(k: int = 3) -> Column:
     """Factory: Arrow-batched word k-shingles — set-identical to the
     Column ``shingles`` spec (pinned by test_shingles_udf_equals_column)
@@ -269,6 +238,18 @@ def _sh64_df(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame
 
 
 def _sig_from_sh64(sh64: DataFrame, num_perm: int) -> DataFrame:
+    """(_id, _h0.._hN) MinHash signatures from the exploded ``_sh64``
+    relation via a per-permutation min aggregation — the scalable
+    shape: shingles materialize exactly once, map-side partial min
+    keeps the single shuffle tiny.  (An array-of-lambdas formulation
+    re-evaluates the shingle array per permutation per row — measured
+    4-5× slower.)
+
+    Permutation i hashes the PRE-HASHED 64-bit shingle value —
+    xxhash64(xxhash64(shingle), i) — so the variable-length string is
+    hashed once and each of the num_perm permutations mixes 8 fixed
+    bytes, instead of re-hashing the string num_perm times (the
+    dominant cost at ~20 chars/shingle × 32 permutations)."""
     aggs = [
         F.min(F.xxhash64(F.col("_sh64"), F.lit(i))).alias(f"_h{i}")
         for i in range(num_perm)
@@ -354,14 +335,6 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str, text_col: str,
         "band", "bhash", F.col("_id").alias("id_b")
     ).join(heads, ["band", "bhash"]).select("id_a", "id_b")
     return pairs.unionByName(overflow_pairs).distinct()
-
-
-def minhash_duplicate_groups(df: DataFrame, id_col: str, text_col: str,
-                             threshold: float = 0.8, **lsh_kw) -> DataFrame:
-    """Verified near-dup pairs with their Jaccard (the dedup decision
-    input: keep min(id) per connected component — one union-find pass
-    on the pair list, which is tiny relative to the corpus)."""
-    return ngram_jaccard_pairs(df, id_col, text_col, threshold=threshold)
 
 
 def _free_local_checkpoint(df: DataFrame) -> None:
@@ -1653,9 +1626,9 @@ def _simhash_tally_aggs():
 def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(_id, _sig) 64-bit SimHash signatures — pure Column algebra.
 
-    Shape mirrors ``minhash_signature_df``: tokens explode exactly once,
-    each token is md5-hashed ONCE into two 32-bit chunks (JVM codegen —
-    no Python anywhere), and the groupBy computes 64 bit-tally sums with
+    Shape mirrors ``_sig_from_sh64``: tokens explode exactly once, each
+    token is md5-hashed ONCE into two 32-bit chunks (JVM codegen — no
+    Python anywhere), and the groupBy computes 64 bit-tally sums with
     map-side partial aggregation, so the single shuffle carries 64 longs
     per doc per map partition instead of the text.  Docs with no tokens
     (null/empty text) get signature 0 via ``explode_outer``."""

@@ -495,7 +495,6 @@ class CompileContext:
     require_all: bool = False
     allow_unknown: object = False
     update: bool = False
-    regex_engine: str = "auto"  # 'auto' | 'jvm' | 'python'
     check_with_registry: dict[str, Callable] = dc_field(default_factory=dict)
     #: runtime per-value type checks for string values inside dynamic
     #: containers (map keysrules/valuesrules/fixed-key subschemas) — the
@@ -1117,10 +1116,7 @@ class RuleCompiler:
         if not isinstance(dtype, T.StringType):
             return None  # non-strings pass silently
         spath2 = list(spath) + ["regex"]
-        use_python = self.ctx.regex_engine == "python" or (
-            self.ctx.regex_engine == "auto" and _PY_ONLY_REGEX.search(pattern)
-        )
-        if use_python:
+        if _PY_ONLY_REGEX.search(pattern):
             pat = pattern if pattern.endswith("$") else pattern + "$"
 
             @F.pandas_udf(T.BooleanType())

@@ -227,31 +227,6 @@ def column_stats(df: DataFrame, columns: list[str] | None = None,
 # ---------------------------------------------------------------------------
 
 
-def categorical_profile(df: DataFrame, expr: Column | str, key: str) -> DataFrame:
-    """Frequency profile (key, bucket, freq) for a categorical expression
-    — one shuffle over few distinct buckets; freq normalized to 1."""
-    from pyspark.sql import Window as W
-
-    col = F.col(expr) if isinstance(expr, str) else expr
-    counts = df.groupBy(col.cast("string").alias("bucket")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    # total via an all-partition window over the (tiny) aggregated counts —
-    # no extra action/collect; post-agg cardinality is a handful of buckets
-    total = F.sum("n").over(W.partitionBy())
-    return counts.select(
-        F.lit(key).alias("key"),
-        F.coalesce(F.col("bucket"), F.lit("<null>")).alias("bucket"),
-        (F.col("n") / total).alias("freq"),
-    )
-
-
-def length_histogram_profile(df: DataFrame, col: str, key: str,
-                             bucket_width: int = 100, n_buckets: int = 20) -> DataFrame:
-    """Text-length histogram profile with a capped bucket count."""
-    return categorical_profile(df, length_bucket(col, bucket_width, n_buckets), key)
-
-
 def length_bucket(col: str, bucket_width: int = 100, n_buckets: int = 20) -> Column:
     return F.least(
         F.floor(F.coalesce(F.length(F.col(col)), F.lit(-1)) / bucket_width),

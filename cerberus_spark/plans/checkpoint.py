@@ -305,26 +305,17 @@ class CheckpointStore:
         self.spark = spark
         self.path = path
 
-    def read(self) -> DataFrame:
-        if not fs_exists(self.spark, self.path):
-            return self.spark.createDataFrame([], CHECKPOINT_SCHEMA)
-        return self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.path)
-
     def done_partitions(self, snapshot: str, schema_hash: str,
                         predicate_set: str = "") -> list[int]:
-        rows = (
-            self.read()
-            .filter(
-                (F.col("status") == "done")
-                & (F.col("snapshot_id") == snapshot)
-                & (F.col("rule_schema_hash") == schema_hash)
-                & (F.col("predicate_set") == predicate_set)
-            )
-            .select("part_id")
-            .distinct()
-            .collect()
-        )
-        return sorted(r.part_id for r in rows)
+        """Sorted part_ids committed 'done' under this lineage, read
+        with ``read_rows`` (driver-side on ``file:``, no Spark job)."""
+        lineage = (snapshot, schema_hash, predicate_set)
+        rows = read_rows(self.spark, self.path,
+                         ["part_id", "status", "snapshot_id",
+                          "rule_schema_hash", "predicate_set"])
+        return sorted({r["part_id"] for r in rows if r["status"] == "done"
+                       and (r["snapshot_id"], r["rule_schema_hash"],
+                            r["predicate_set"]) == lineage})
 
     def commit_rows(self, rows: list[dict], snapshot: str,
                     schema_hash: str, predicate_set: str = "") -> None:

@@ -68,7 +68,6 @@ from .plans.checkpoint import (CheckpointStore, fs_delete, fs_exists,
 class RunConfig:
     out_dir: str
     n_parts: int = 64
-    key_cols: tuple = ("conv_id", "turn_idx")
     conv_col: str = "conv_id"
     order_col: str = "turn_idx"
     ts_col: str = "ts"
@@ -83,6 +82,11 @@ class RunConfig:
     #: order_tie).  None (default) skips the check; when set, sequence
     #: violations join the dataset-violations sink and the report.
     sequence_rules: dict | None = None
+
+    @property
+    def key_cols(self) -> tuple[str, str]:
+        """A turn's key: its conversation and its position in it."""
+        return (self.conv_col, self.order_col)
 
 
 @dataclass
@@ -319,13 +323,12 @@ class ValidationRun:
         """The durable summary's rows stamped with ``lineage`` (only
         those of ``part_ids`` when given) — ≤ n_parts totals rows (NULL
         ``key``) plus their drift profile rows, read driver-side on
-        ``file:`` (``read_rows``).  A summary written before the lineage
-        column existed reads it as None and counts as this lineage."""
+        ``file:`` (``read_rows``)."""
         rows = read_rows(spark, self._path("summary"),
                          ["part_id", "lineage", "key", "bucket", "n_rows",
                           "n_failed", "n_violations"])
         return [r for r in rows
-                if r["lineage"] in (lineage, None)
+                if r["lineage"] == lineage
                 and (part_ids is None or r["part_id"] in part_ids)]
 
     def _run_dataset_checks(self, spark, df, conversations) -> dict[int, int]:

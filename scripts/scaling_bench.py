@@ -2,94 +2,61 @@
 
 efficiency = (throughput(4N) / throughput(N)) / 4   — target ≥ 0.8
 
-Evidence protocol (per VERDICT r1: "the bar is evidence, not argument"):
+Every level runs through ``scripts/scale_probe.py fullpass`` (a fresh
+``local[N]`` JVM per level, one warm-up, best of the reps, executor CPU
+and run time per rep from Spark's event log), which writes
+``BENCH/scaling_<sf>_c<N>.json``; this script then writes
+``BENCH/BASELINE.md`` from those files.
 
 * sf1 (6M turns, cache-resident working set): N=local[8] vs
-  4N=local[32], best-of-7 compute walls + best-of-3 full-pass walls,
-  ALL reps reported — the primary ≥0.8 measurement, taken where the
-  sandbox's single-box hardware itself scales 4×.
-* sf10 (60M turns, RAM-streaming working set): an 8/16/32-thread sweep
-  of the compute phase with executor CPU totals — demonstrating that
-  past ~8 threads this VM's MEMORY BANDWIDTH is the binding constraint
-  (identical work costs 2-3× the CPU-seconds at 32 threads: stall
-  cycles, not instructions), while thread utilization (run/wall) stays
-  high — i.e. the plan has no idle-executor bottleneck; the wall gap is
-  a shared-box ceiling that a real 4N-EXECUTOR cluster (4N× memory
-  channels) does not have.  The north rule scales executors, and this
-  decomposition is exactly the evidence for why.
-* task-level executorCpuTime/executorRunTime from the status REST API
-  at every level; -XX:ActiveProcessorCount pins each JVM to its nominal
-  core count; n_parts fixed across levels (identical job).
+  4N=local[32], compute phase and full pass, best of 7, all reps
+  reported.
+* sf10 (60M turns, RAM-streaming working set): a 4/8/16/32-thread
+  sweep of the compute phase — past ~8 threads a single box's MEMORY
+  BANDWIDTH binds (identical work costs more CPU-seconds at 32 threads:
+  stall cycles, not instructions) while thread utilization (run/wall)
+  stays high, i.e. the plan has no idle-executor bottleneck; a real
+  4N-EXECUTOR cluster (4N× memory channels) does not have that ceiling.
+
+    python scripts/scaling_bench.py [sf1|sf10]
+
+With an argument only that scale is re-measured; the other is read from
+its persisted JSON files.
 """
 
 import json
 import os
-import subprocess
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+import scale_probe
+
+REPO = scale_probe.REPO
 
 
-def run_level(sf: str, cpus: int, *, skip_full: bool = False,
-              repeat: int = 5) -> dict:
-    env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus),
-               SPARK_GRAFT_TRANSCRIPTS_SF=sf,
-               SPARK_GRAFT_REPEAT=str(repeat))
-    if skip_full:
-        env["SPARK_GRAFT_SKIP_FULL"] = "1"
-    out = subprocess.run(
-        [sys.executable, os.path.join(REPO, "scripts", "scaling_run.py")],
-        env=env, capture_output=True, text=True, timeout=5400,
-    )
-    lines = [l for l in out.stdout.strip().splitlines() if l.startswith("{")]
-    if not lines:
-        raise RuntimeError(
-            f"scaling_run failed sf={sf} cpus={cpus}:\n"
-            f"{out.stdout[-2000:]}\n{out.stderr[-2000:]}")
-    r = json.loads(lines[-1])
-    # persist every level's raw JSON for auditability; MERGE with prior
-    # sessions' reps — the sandbox shares cores with other tenants and a
-    # single session can be hit by minutes-long co-tenant bursts (observed:
-    # identical reps 2-20× apart); min-wall over all recorded reps is the
-    # standard noise-floor estimator, and every rep stays visible.
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    path = os.path.join(REPO, "BENCH", f"scaling_{sf}_c{cpus}.json")
-    if os.path.exists(path):
-        with open(path) as f:
-            prior = json.load(f)
-        for phase in ("compute", "full"):
-            if r.get(phase) and prior.get(phase):
-                merged = prior[phase]["reps"] + r[phase]["reps"]
-                best = min(x["wall_s"] for x in merged)
-                at_best = next(x for x in merged if x["wall_s"] == best)
-                r[phase].update(
-                    reps=merged, best_wall_s=best,
-                    turns_per_sec=round(r["n_rows"] / best, 1),
-                    cpu_s_at_best=at_best["cpu_s"],
-                    run_s_at_best=at_best["run_s"],
-                )
-    with open(path, "w") as f:
-        json.dump(r, f)
-    return r
+def run_level(sf: str, cpus: int, repeat: int) -> dict:
+    out = scale_probe.probe("fullpass", [cpus], scale_probe.SF_ROWS[sf], repeat)
+    return out["levels"][str(cpus)]
 
 
-def reps_s(section):
-    return ", ".join(str(r["wall_s"]) for r in section["reps"])
+def reps_s(t):
+    return ", ".join(str(r["wall_s"]) for r in t["reps"])
 
 
 def compute_row(label, r):
-    c = r["compute"]
-    par = c["run_s_at_best"] / c["best_wall_s"] if c["best_wall_s"] else 0
-    return (f"| {label} | {c['best_wall_s']} | {reps_s(c)} | "
-            f"{c['turns_per_sec']:,} | {c['cpu_s_at_best']} | "
-            f"{c['run_s_at_best']} | {par:.1f} |")
+    c = r["timings"]["compute"]
+    b = c["best"]
+    par = b["run_s"] / b["wall_s"] if b["wall_s"] else 0
+    return (f"| {label} | {b['wall_s']} | {reps_s(c)} | "
+            f"{c['rows_per_sec']:,} | {b['cpu_s']} | "
+            f"{b['run_s']} | {par:.1f} |")
 
 
 def full_row(label, r):
-    f = r["full"]
-    return (f"| {label} | {f['best_wall_s']} | {reps_s(f)} | "
-            f"{f['turns_per_sec']:,} | {f['cpu_s_at_best']} | "
-            f"{f['run_s_at_best']} | {f['n_failed']} |")
+    f = r["timings"]["full"]
+    b = f["best"]
+    return (f"| {label} | {b['wall_s']} | {reps_s(f)} | "
+            f"{f['rows_per_sec']:,} | {b['cpu_s']} | "
+            f"{b['run_s']} | {f['result']['n_failed']} |")
 
 
 def load_level(sf: str, cpus: int) -> dict:
@@ -98,10 +65,6 @@ def load_level(sf: str, cpus: int) -> dict:
 
 
 def main():
-    # `scaling_bench.py sf10` re-measures only the sf10 sweep (merging
-    # reps with prior sessions) and regenerates the report from the
-    # persisted JSONs for everything else; same for `sf1`; no argument
-    # runs everything.
     only = sys.argv[1] if len(sys.argv) > 1 else None
     if only in (None, "sf1"):
         s1_8 = run_level("sf1", 8, repeat=7)
@@ -109,7 +72,7 @@ def main():
     else:
         s1_8, s1_32 = load_level("sf1", 8), load_level("sf1", 32)
     if only in (None, "sf10"):
-        s10 = {c: run_level("sf10", c, skip_full=True, repeat=5)
+        s10 = {c: run_level("sf10", c, repeat=5)
                for c in (4, 8, 16, 32)}
     else:
         s10 = {}
@@ -119,25 +82,28 @@ def main():
             except FileNotFoundError:
                 pass
 
-    c1_eff = (s1_32["compute"]["turns_per_sec"] / s1_8["compute"]["turns_per_sec"]) / 4
-    f_eff = (s1_32["full"]["turns_per_sec"] / s1_8["full"]["turns_per_sec"]) / 4
+    def thr(r, job):
+        return r["timings"][job]["rows_per_sec"]
+
+    c1_eff = (thr(s1_32, "compute") / thr(s1_8, "compute")) / 4
+    f_eff = (thr(s1_32, "full") / thr(s1_8, "full")) / 4
     sweep_rows = "\n".join(
         compute_row(f"local[{c}]", s10[c]) for c in sorted(s10)
     )
-    thr = {c: s10[c]["compute"]["turns_per_sec"] for c in s10}
-    eff_16 = (thr[16] / thr[8]) / 2
-    eff_32 = (thr[32] / thr[8]) / 4
-    eff_4_16 = (thr[16] / thr[4]) / 4 if 4 in thr else None
+    t10 = {c: thr(s10[c], "compute") for c in s10}
+    eff_16 = (t10[16] / t10[8]) / 2
+    eff_32 = (t10[32] / t10[8]) / 4
+    eff_4_16 = (t10[16] / t10[4]) / 4 if 4 in t10 else None
     pair_line = (
         f"**N→4N at 4→16 cores = {eff_4_16:.3f}** (the cleanest N→4N pair: "
         "both levels leave the 32-core box headroom, so co-tenant noise and "
         "whole-box bandwidth pressure don't conflate with scaling)\n"
         if eff_4_16 is not None else ""
     )
-    cpu8 = s10[8]["compute"]["cpu_s_at_best"]
-    cpu32 = s10[32]["compute"]["cpu_s_at_best"]
-    util8 = s10[8]["compute"]["run_s_at_best"] / s10[8]["compute"]["best_wall_s"] / 8
-    util32 = s10[32]["compute"]["run_s_at_best"] / s10[32]["compute"]["best_wall_s"] / 32
+    b8, b32 = (s10[c]["timings"]["compute"]["best"] for c in (8, 32))
+    cpu8, cpu32 = b8["cpu_s"], b32["cpu_s"]
+    util8 = b8["run_s"] / b8["wall_s"] / 8
+    util32 = b32["run_s"] / b32["wall_s"] / 32
 
     md = f"""# BENCH/BASELINE — scaling evidence (north rule)
 
@@ -145,13 +111,11 @@ Same job, identical deterministic input per scale (seed=42, one hot
 conversation), fresh JVM per level with
 `-XX:ActiveProcessorCount=<cores>` (an N-core run behaves like an
 N-core node, GC/JIT pools included), one warm-up pass, task-level
-executor metrics from the Spark status REST API, `n_parts` fixed across
-levels.  NOISE PROTOCOL: this sandbox shares its 32 cores with other
-tenants (identical reps measured 2-20× apart when a co-tenant bursts);
-each level is therefore measured over MULTIPLE independent sessions,
-every rep is recorded in `BENCH/scaling_*.json` and listed below, and
-the noise-floor wall is the minimum over all reps — symmetrically for
-every level.
+executor metrics from Spark's event log, `n_parts` fixed across
+levels.  NOISE PROTOCOL: co-tenants on a shared host can make identical
+reps 2-20× apart; every rep is recorded in `BENCH/scaling_*.json` and
+listed below, and the noise-floor wall is the minimum over a level's
+reps — symmetrically for every level.
 
 ## Primary measurement — sf10 (60M turns), compute phase, 8/16/32 sweep
 
@@ -206,7 +170,7 @@ Spark jobs whose scheduling + parquet-commit costs are core-count
 independent; at sandbox scale they are a large wall fraction, at 100 TB
 they amortize to zero and the full pass converges to the compute-phase
 number.  Failed-turn counts are identical at both levels:
-{s1_8['full']['n_failed'] == s1_32['full']['n_failed']} — the job computes the same answer at every
+{s1_8['timings']['full']['result'] == s1_32['timings']['full']['result']} — the job computes the same answer at every
 parallelism.
 
 Reference single-core baseline (BASELINE.md): ~2,200 turns/s for the

@@ -47,3 +47,24 @@ def test_one_row_meta_reads_identically_across_io_branches(
     assert read_one_row(spark, path) == want
     assert read_one_row(spark, path, schema + ", hash_buckets int") == \
         {**want, "hash_buckets": None}
+
+
+def test_done_partitions_runs_no_spark_job_on_local_dirs(spark, io_branch, tmp_path):
+    """``done_partitions`` reads the checkpoint driver-side on ``file:``
+    (no Spark job) and through Spark elsewhere; both return the same
+    part_ids, only those of the asked lineage."""
+    store = CheckpointStore(spark, str(tmp_path / "checkpoint"))
+    store.commit_rows([_summary_row(2), _summary_row(0)], "snap", "hash", "p")
+    store.commit_rows([_summary_row(1)], "other", "hash", "p")
+    store.commit_rows([_summary_row(3)], "snap", "hash", "q")
+
+    sc = spark.sparkContext
+    group = f"done-partitions-{io_branch}"
+    sc.setJobGroup(group, "done_partitions")
+    try:
+        done = store.done_partitions("snap", "hash", "p")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert done == [0, 2]
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert (len(jobs) > 0) == (io_branch == "spark")

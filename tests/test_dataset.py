@@ -63,10 +63,8 @@ def test_drift(spark):
     t1, _ = synthesize(3000, seed=42, drift=False)
     t2, _ = synthesize(3000, seed=42, drift=True)
     df1, df2 = spark.createDataFrame(t1), spark.createDataFrame(t2)
-    p1 = D.categorical_profile(df1, "role", "role").unionByName(
-        D.length_histogram_profile(df1, "text", "text_len"))
-    p2 = D.categorical_profile(df2, "role", "role").unionByName(
-        D.length_histogram_profile(df2, "text", "text_len"))
+    specs = [("role", "role"), ("text_len", D.length_bucket("text"))]
+    p1, p2 = D.multi_profile(df1, specs), D.multi_profile(df2, specs)
     same = D.drift_metrics(p1, p1)
     assert all(abs(m["psi"]) < 1e-9 for m in same)
     moved = {m["key"]: m for m in D.drift_metrics(p2, p1)}
@@ -213,12 +211,16 @@ def test_multi_profile_equals_separate_profiles(spark, data):
               for r in D.multi_profile(t, [
                   ("role", "role"), ("tool", "tool"),
                   ("text_len", D.length_bucket("text"))]).collect()}
+    # one groupBy per spec, normalized on the driver
     separate = {}
-    for prof in (D.categorical_profile(t, "role", "role"),
-                 D.categorical_profile(t, "tool", "tool"),
-                 D.length_histogram_profile(t, "text", "text_len")):
-        for r in prof.collect():
-            separate[(r["key"], r["bucket"])] = r["freq"]
+    for key, expr in (("role", "role"), ("tool", "tool"),
+                      ("text_len", D.length_bucket("text"))):
+        col = F.col(expr) if isinstance(expr, str) else expr
+        counts = {r["b"]: r["n"] for r in t.groupBy(
+            col.cast("string").alias("b")).agg(F.count(F.lit(1)).alias("n")).collect()}
+        total = sum(counts.values())
+        for b, n in counts.items():
+            separate[(key, "<null>" if b is None else b)] = n / total
     assert merged.keys() == separate.keys()
     assert all(abs(merged[k] - separate[k]) < 1e-12 for k in merged)
 
