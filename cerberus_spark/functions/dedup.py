@@ -597,9 +597,9 @@ def dedup_against(new: DataFrame, ref: DataFrame, id_col: str,
 # deterministic (xxhash64 permutations are seed-free by construction),
 # so they can be written ONCE at epoch commit and probed forever:
 #
-#   {store}/bands/epoch=N/pb=M  (band int, bhash long, _id) ~bands/doc
-#   {store}/hashes/epoch=N      (_id, _sh64 long)        ~shingles/doc
-#   {store}/meta   one row (k, num_perm, bands, band_buckets) — guard
+#   {store}/bands/epoch=N   (_id, band int, bhash long)  ~bands/doc
+#   {store}/hashes/epoch=N  (_id, _sh64 long)            ~shingles/doc
+#   {store}/meta   one row (k, num_perm, bands) — guard
 #
 # A probe (a) bands the NEW batch, (b) left-semi-joins the band store
 # against the batch's (band, bhash) keys — the store side is scanned
@@ -609,16 +609,19 @@ def dedup_against(new: DataFrame, ref: DataFrame, id_col: str,
 # exact Jaccard against the hash store restricted to CANDIDATE ref ids
 # (left-semi again).  Per-epoch compute is ∝ batch + candidates.
 #
-# Store-scan pruning: the bands table is sub-partitioned by
-# ``pb = pmod(bhash, band_buckets)`` (pinned in meta — a probe never
-# guesses the layout) and the probe statically prunes to the batch's
-# touched pb dirs, so store I/O per probe is
-# ``store_size × (1 − (1 − 1/B)^n)`` for n distinct batch band-keys —
-# a trickle ingest (n ≪ B) touches a handful of files; a bulk batch
-# (n ≳ B) degrades gracefully to the old full columnar scan.  Files
-# are additionally sorted by bhash within each pb so parquet row-group
-# min/max stats can prune inside a touched dir.  (At 10^12 docs, the
-# same layout as an Iceberg bucket transform gives this for free.)
+# One layout: each epoch of each table is one plain parquet directory
+# of a few files, and every read lists the epoch dirs recursively.  A
+# hash-bucketed layout (``pb=``/``ph=`` sub-directories, the probe
+# pruning its read to the batch's touched dirs) was measured slower at
+# every batch size, build included (BENCH/bucket_prune_probe.json:
+# 300k-doc store, 4,096 buckets, 16 cores; 10-doc probe 2.32 s flat
+# vs 4.53 s bucketed, 1,000 docs 3.93 vs 14.65 s) and wrote one file
+# per touched bucket per epoch, so it was removed.  Epoch dirs an
+# older writer laid out in buckets still read the same: the recursive
+# listing finds their files and no bucket column appears.  At a scale
+# where a tiny batch should read a fraction of the store, the layout
+# to reach for is a catalog bucket transform (an Iceberg table), not
+# hand-made dirs.
 
 
 def _band_structs(num_perm: int, bands: int):
@@ -632,37 +635,20 @@ def _band_structs(num_perm: int, bands: int):
 
 
 def _check_store_meta(spark, store_dir: str, k: int, num_perm: int,
-                      bands: int, create: bool,
-                      band_buckets: int | None = None,
-                      hash_buckets: int | None = None) -> tuple[int, int]:
+                      bands: int, create: bool) -> None:
     """Band rows are only comparable under identical (k, num_perm,
     bands) — a probe with different parameters would silently miss
     every pair.  The store pins its parameters at creation; mismatch
-    raises.  Returns ``(band_buckets, hash_buckets)`` — the two
-    sub-partition counts (bands table by ``pmod(bhash, B)``, hashes
-    table by ``pmod(xxhash64(_id), H)``), also pinned: the PROBE reads
-    the layout from meta rather than trusting a caller parameter, so a
-    mismatched caller can never silently prune the wrong dirs; 0 =
-    flat (un-bucketed) layout.
-
-    On append (``create=True`` over an existing meta) a ``None``
-    bucket parameter ADOPTS the store's pinned layout — a resuming
-    ingest never has to restate the layout it created the store with;
-    an explicit value that CONFLICTS with the pinned one still raises.
-    At creation ``None`` resolves to the defaults (B=256, H=0)."""
+    raises.  Meta rows written by older versions carry extra layout
+    columns; they are not read."""
     from ..plans.checkpoint import fs_exists
 
     meta_path = f"{store_dir}/meta"
     if fs_exists(spark, meta_path):
-        # driver-side one-row read (local fast path); the explicit
-        # schema means a legacy meta row without band_buckets/
-        # hash_buckets reads as NULL (handled below — both degrade to
-        # the flat layout they were written with)
+        # driver-side one-row read (local fast path)
         from ..plans.checkpoint import read_one_row
-        row = read_one_row(
-            spark, meta_path,
-            schema="k int, num_perm int, bands int, band_buckets int, "
-                   "hash_buckets int")
+        row = read_one_row(spark, meta_path,
+                           schema="k int, num_perm int, bands int")
         got = (row["k"], row["num_perm"], row["bands"])
         if got != (k, num_perm, bands):
             raise ValueError(
@@ -670,38 +656,15 @@ def _check_store_meta(spark, store_dir: str, k: int, num_perm: int,
                 f"(k, num_perm, bands)={got}, probe/write requested "
                 f"{(k, num_perm, bands)} — band hashes are not "
                 f"comparable across parameter sets")
-        stored_bb = int(row["band_buckets"] or 0)
-        stored_hb = int(row["hash_buckets"] or 0)
-        if create and band_buckets is not None \
-                and stored_bb != band_buckets:
-            raise ValueError(
-                f"band store at {store_dir} is laid out with "
-                f"band_buckets={stored_bb}, write requested "
-                f"{band_buckets} — appending a different sub-partition "
-                f"layout would break probe-side pruning")
-        if create and hash_buckets is not None \
-                and stored_hb != hash_buckets:
-            raise ValueError(
-                f"band store at {store_dir} is laid out with "
-                f"hash_buckets={stored_hb}, write requested "
-                f"{hash_buckets} — appending a different sub-partition "
-                f"layout would break probe-side pruning")
-        return stored_bb, stored_hb
     elif create:
         from ..plans.checkpoint import write_rows
-        bb = 256 if band_buckets is None else band_buckets
-        hb = 0 if hash_buckets is None else hash_buckets
-        write_rows(spark, meta_path,
-                   "k int, num_perm int, bands int, band_buckets int, "
-                   "hash_buckets int",
-                   [(k, num_perm, bands, bb, hb)])
-        return bb, hb
+        write_rows(spark, meta_path, "k int, num_perm int, bands int",
+                   [(k, num_perm, bands)])
     else:
         raise ValueError(f"no band store at {store_dir} (missing meta)")
 
 
 def _read_epochs(spark, table_dir: str, max_epoch: int | None,
-                 subdirs: set[str] | None = None,
                  schema: str | None = None):
     """Read an epoch-partitioned store table by EXPLICIT epoch-dir
     paths (listed at plan time) instead of a bare parent-dir scan.
@@ -717,13 +680,11 @@ def _read_epochs(spark, table_dir: str, max_epoch: int | None,
     epochs are never even listed, let alone filtered.  Returns None
     when no matching epoch exists.
 
-    ``subdirs`` (e.g. ``{'pb=3', 'pb=17'}``) restricts the read to
-    those sub-partition dirs of each epoch — the path set is the
-    intersection with what each epoch actually contains, so both the
-    LISTING and the READ scale with the touched set, not the store
-    (one fs_list per epoch to discover presence; epochs are few after
-    compaction)."""
-    from ..plans.checkpoint import fs_list
+    Each epoch dir is listed recursively, so no partition column
+    (``epoch``, or the ``pb``/``ph`` of an epoch an older writer laid
+    out in bucket dirs) is discovered: the frame holds the data
+    columns only."""
+    from ..plans.checkpoint import fs_list, sequential_listing
 
     names = [n for n in fs_list(spark, table_dir) if n.startswith("epoch=")]
     if max_epoch is not None:
@@ -731,102 +692,44 @@ def _read_epochs(spark, table_dir: str, max_epoch: int | None,
                  if int(n.split("=", 1)[1]) < max_epoch]
     if not names:
         return None
-    if subdirs is None:
-        paths = [f"{table_dir}/{n}" for n in sorted(names)]
-    else:
-        paths = []
-        for n in sorted(names):
-            present = fs_list(spark, f"{table_dir}/{n}")
-            paths += [f"{table_dir}/{n}/{d}" for d in sorted(present)
-                      if d in subdirs]
-        if not paths:
-            return None
-    rd = spark.read.option("basePath", table_dir)
+    rd = spark.read.option("recursiveFileLookup", "true")
     if schema is not None:
         # callers that know the table's data schema (it is fixed by the
         # store contract) pass it explicitly so the scan skips footer
-        # schema inference; partition columns (epoch=, pb=) are still
-        # discovered from the paths and appended
+        # schema inference
         rd = rd.schema(schema)
-    from ..plans.checkpoint import sequential_listing
     with sequential_listing(spark, table_dir):
-        return rd.parquet(*paths)
+        return rd.parquet(*[f"{table_dir}/{n}" for n in sorted(names)])
 
 
 def write_band_store(df: DataFrame, store_dir: str, epoch: int,
                      id_col: str, text_col: str, k: int = 3,
-                     num_perm: int = 32, bands: int = 8,
-                     band_buckets: int | None = None,
-                     hash_buckets: int | None = None) -> None:
+                     num_perm: int = 32, bands: int = 8) -> None:
     """Append one epoch's survivors to the band store (see the section
-    comment above).  Idempotent per epoch — a retried epoch overwrites
-    exactly its own partitions.  Ids must be unique across epochs (each
-    doc is committed by exactly one epoch — the ingest contract).
-    Tokenless rows carry no shingle evidence and are not stored, same
-    policy as the whole near-dup family.
-
-    ``band_buckets`` sub-partitions the bands table by
-    ``pmod(bhash, band_buckets)`` so probes prune their candidate scan
-    to touched dirs; ``hash_buckets`` sub-partitions the HASHES table
-    by ``pmod(xxhash64(_id), hash_buckets)`` so the probe's
-    exact-verify read is pruned to the dirs holding candidate ref ids
-    — without it that read is corpus-proportional per epoch.  Both are
-    pinned in meta at creation; on APPEND ``None`` (the default)
-    adopts the store's pinned layout and only an explicitly
-    conflicting value raises.  Creation defaults: B=256, H=0 — the
-    flat hashes layout, because id-bucketing pays when the batch's
-    candidate set touches FEW of H dirs (trickle batches against a
-    large store: the streaming ingest regime, which opts in) and costs
-    a sub-partitioned write plus H-dir listings when it doesn't
-    (measured +0.3 s/epoch at bench scale, where a 42k-doc batch
-    touches every dir of any reasonable H)."""
+    comment above): one plain parquet dir per table.  Idempotent per
+    epoch — a retried epoch overwrites exactly its own partitions.  Ids
+    must be unique across epochs (each doc is committed by exactly one
+    epoch — the ingest contract).  Tokenless rows carry no shingle
+    evidence and are not stored, same policy as the whole near-dup
+    family."""
     from pyspark import StorageLevel
 
     spark = df.sparkSession
-    band_buckets, hash_buckets = _check_store_meta(
-        spark, store_dir, k, num_perm, bands, create=True,
-        band_buckets=band_buckets, hash_buckets=hash_buckets)
+    _check_store_meta(spark, store_dir, k, num_perm, bands, create=True)
     sh64 = _sh64_df(df.filter(F.size(words(F.col(text_col))) > 0),
                     id_col, text_col, k).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         def _write_hashes():
-            if hash_buckets > 0:
-                n_tasks = max(1, min(hash_buckets,
-                                     spark.sparkContext.defaultParallelism))
-                (sh64
-                 .withColumn("ph", F.pmod(F.xxhash64("_id"),
-                                          F.lit(hash_buckets)).cast("int"))
-                 .repartition(n_tasks, "ph")
-                 .sortWithinPartitions("ph", "_id")
-                 .write.mode("overwrite").partitionBy("ph")
-                 .parquet(f"{store_dir}/hashes/epoch={epoch}"))
-            else:
-                sh64.write.mode("overwrite").parquet(
-                    f"{store_dir}/hashes/epoch={epoch}")
+            sh64.write.mode("overwrite").parquet(
+                f"{store_dir}/hashes/epoch={epoch}")
 
         def _write_bands():
             sig = _sig_from_sh64(sh64, num_perm)
-            band_rows = (sig.select("_id",
-                                    F.explode(_band_structs(num_perm, bands))
-                                    .alias("bb"))
-                         .select("_id", "bb.band", "bb.bhash"))
-            if band_buckets > 0:
-                # partitionBy splits files by pb VALUE, so the layout is
-                # one file per touched pb regardless of task count — cap
-                # tasks at the session parallelism (256 single-file tasks
-                # measured ~2s of pure launch overhead per 30k-doc epoch)
-                n_tasks = max(1, min(band_buckets,
-                                     spark.sparkContext.defaultParallelism))
-                (band_rows
-                 .withColumn("pb", F.pmod(F.col("bhash"),
-                                          F.lit(band_buckets)).cast("int"))
-                 .repartition(n_tasks, "pb")
-                 .sortWithinPartitions("pb", "bhash")
-                 .write.mode("overwrite").partitionBy("pb")
-                 .parquet(f"{store_dir}/bands/epoch={epoch}"))
-            else:
-                band_rows.write.mode("overwrite").parquet(
-                    f"{store_dir}/bands/epoch={epoch}")
+            (sig.select("_id", F.explode(_band_structs(num_perm, bands))
+                        .alias("bb"))
+             .select("_id", "bb.band", "bb.bhash")
+             .write.mode("overwrite").parquet(
+                 f"{store_dir}/bands/epoch={epoch}"))
 
         # the two table writes are independent consumers of the pinned
         # shingle relation — overlap their jobs from driver threads
@@ -863,8 +766,8 @@ def cross_dup_pairs_stored(new: DataFrame, store_dir: str, id_col: str,
     is never re-shingled: bands and shingle hashes come from the store.
 
     ``max_epoch`` restricts the reference to ``epoch < max_epoch``
-    (partition-pruned) so a retried epoch never probes its own
-    half-committed write.  Caps mirror ``cross_dup_pairs``: each side
+    (later epoch dirs are never listed) so a retried epoch never probes
+    its own half-committed write.  Caps mirror ``cross_dup_pairs``: each side
     of a touched bucket is ranked independently, overflow NEW members
     still pair with the bucket's first stored ref member.  The ranking
     windows only run when some touched bucket actually EXCEEDS the cap
@@ -872,19 +775,17 @@ def cross_dup_pairs_stored(new: DataFrame, store_dir: str, id_col: str,
     cannot change the output); ``bucket_cap=None`` asserts no-cap
     outright and skips the check.
 
-    CACHE LIFETIME: with ``persist_shingles=True`` three batch-sized
-    frames are pinned for the duration of the plan.  A LOOP caller
-    (the per-epoch ingest) should pass a ``pinned`` list — the frames
-    are appended to it and the caller unpersists after the epoch's
-    writes materialize; without it they stay cached until ContextCleaner
-    GC (fine for one-shot calls)."""
+    CACHE LIFETIME: with ``persist_shingles=True`` the batch- and
+    candidate-sized frames are pinned for the duration of the plan.  A
+    LOOP caller (the per-epoch ingest) should pass a ``pinned`` list —
+    the frames are appended to it and the caller unpersists after the
+    epoch's writes materialize; without it they stay cached until
+    ContextCleaner GC (fine for one-shot calls)."""
     from pyspark import StorageLevel
 
     spark = new.sparkSession
-    store_bb, store_hb = _check_store_meta(spark, store_dir, k, num_perm,
-                                           bands, create=False)
+    _check_store_meta(spark, store_dir, k, num_perm, bands, create=False)
     id_type = dict(new.dtypes)[id_col]
-    hashes_schema = f"_id {id_type}, _sh64 bigint"
 
     def _empty():
         return spark.createDataFrame(
@@ -905,50 +806,15 @@ def cross_dup_pairs_stored(new: DataFrame, store_dir: str, id_col: str,
         if pinned is not None:
             pinned.extend([sh64_new, bands_new])
 
-    # the batch's distinct bucket keys drive BOTH the pb-path pruning
-    # below and the store semi-join — one aggregation, two consumers
-    # (previously two independent distincts over the full bands frame)
-    touched = bands_new.select("band", "bhash").distinct()
-    if persist_shingles:
-        touched = touched.persist(StorageLevel.MEMORY_AND_DISK)
-        if pinned is not None:
-            pinned.append(touched)
-
-    bands_schema = f"_id {id_type}, band int, bhash bigint"
-    if store_bb > 0:
-        # pruning by EXPLICIT PATHS: the batch's touched pb set (≤
-        # band_buckets ints, derived from the batch-sized — and by
-        # default persisted — distinct bucket keys) restricts the store
-        # read's path list itself, so dir listing AND bytes read scale
-        # with the touched set, not the store
-        touched_pb = {r[0] for r in
-                      touched.select(
-                          F.pmod(F.col("bhash"), F.lit(store_bb))
-                          .cast("int").alias("pb")).distinct().collect()}
-        if len(touched_pb) >= store_bb:
-            # degenerate no-pruning case (a large batch touches every
-            # bucket): read the epoch dirs whole — same files, one
-            # listed path per epoch instead of store_bb explicit
-            # subdir paths (~0.7 s of sequential fs_list + file-index
-            # setup at B=256 on this sandbox)
-            ref_bands = _read_epochs(spark, f"{store_dir}/bands",
-                                     max_epoch, schema=bands_schema)
-        else:
-            ref_bands = _read_epochs(
-                spark, f"{store_dir}/bands", max_epoch,
-                subdirs={f"pb={p}" for p in touched_pb},
-                schema=bands_schema)
-        if ref_bands is not None:
-            ref_bands = ref_bands.drop("pb")
-    else:
-        ref_bands = _read_epochs(spark, f"{store_dir}/bands", max_epoch,
-                                 schema=bands_schema)
+    ref_bands = _read_epochs(spark, f"{store_dir}/bands", max_epoch,
+                             schema=f"_id {id_type}, band int, bhash bigint")
     if ref_bands is None:
         return _empty()
 
     # the store is scanned (columnar longs — no text, no UDF, no
     # signature agg) and filtered by the batch's bucket keys; the small
     # probe side broadcasts, so the store is NEVER shuffled
+    touched = bands_new.select("band", "bhash").distinct()
     ref_touched = ref_bands.join(F.broadcast(touched), ["band", "bhash"],
                                  "left_semi") \
         .select("band", "bhash", F.col("_id").alias("id_ref"))
@@ -1012,7 +878,7 @@ def cross_dup_pairs_stored(new: DataFrame, store_dir: str, id_col: str,
         # it rather than re-running the banding/window pipeline per
         # consumer.  Gated with the other caches: persist_shingles=False
         # keeps the whole probe plan cache-free (and introspectable —
-        # inputFiles() sees through to the pruned store scan).
+        # inputFiles() sees through to the store scan).
         cands = cands.persist(StorageLevel.MEMORY_AND_DISK)
         if pinned is not None:
             pinned.append(cands)
@@ -1020,32 +886,8 @@ def cross_dup_pairs_stored(new: DataFrame, store_dir: str, id_col: str,
     # exact-Jaccard verify against the hash store restricted to the
     # candidate ref ids (left-semi: candidate-proportional agg)
     cand_ids = cands.select("id_ref").distinct()
-    if store_hb > 0:
-        # the hashes table is laid out by pmod(xxhash64(_id), H): prune
-        # the verify READ to the dirs that can hold a candidate ref id
-        # (same explicit-path machinery as the bands pb pruning above —
-        # without it this read is corpus-proportional per epoch).  The
-        # ph set is ≤ H ints collected from the candidate-sized — and
-        # by default persisted — pair list.
-        touched_ph = {r[0] for r in
-                      cand_ids.select(
-                          F.pmod(F.xxhash64("id_ref"), F.lit(store_hb))
-                          .cast("int").alias("ph")).distinct().collect()}
-        if len(touched_ph) >= store_hb:
-            # degenerate: candidates land in every dir — read the epoch
-            # dirs whole (same files, fewer listed paths)
-            ref_hashes = _read_epochs(spark, f"{store_dir}/hashes",
-                                      max_epoch, schema=hashes_schema)
-        else:
-            ref_hashes = _read_epochs(
-                spark, f"{store_dir}/hashes", max_epoch,
-                subdirs={f"ph={p}" for p in touched_ph},
-                schema=hashes_schema)
-        if ref_hashes is not None:
-            ref_hashes = ref_hashes.drop("ph")
-    else:
-        ref_hashes = _read_epochs(spark, f"{store_dir}/hashes", max_epoch,
-                                  schema=hashes_schema)
+    ref_hashes = _read_epochs(spark, f"{store_dir}/hashes", max_epoch,
+                              schema=f"_id {id_type}, _sh64 bigint")
     if ref_hashes is None:
         return _empty()
     ref_cand = (ref_hashes
@@ -1161,11 +1003,11 @@ def _compact_finalize(spark, store_dir: str, tables: tuple[str, ...],
 
 
 def compact_epoch_store(spark, store_dir: str, tables: tuple[str, ...],
-                        upto: int,
-                        target_partitions: int | None = None) -> bool:
+                        upto: int) -> bool:
     """Compact every ``epoch < upto`` partition of each table into one
-    partition labeled ``epoch = upto - 1``.  Returns False when there
-    is nothing to do (≤1 live partition below the watermark)."""
+    flat partition of ``defaultParallelism`` files labeled
+    ``epoch = upto - 1``.  Returns False when there is nothing to do
+    (≤1 live partition below the watermark)."""
     from ..plans.checkpoint import fs_exists, fs_list
 
     if not fs_exists(spark, f"{store_dir}/meta"):
@@ -1175,31 +1017,13 @@ def compact_epoch_store(spark, store_dir: str, tables: tuple[str, ...],
             if n.startswith("epoch=") and int(n.split("=", 1)[1]) < upto]
     if len(live) <= 1:
         return False
-    if target_partitions is None:
-        target_partitions = max(1, spark.sparkContext.defaultParallelism)
+    n_files = spark.sparkContext.defaultParallelism
     tmp = f"{store_dir}/_compact_tmp"
     for table in tables:
         src = _read_epochs(spark, f"{store_dir}/{table}", upto)
-        if src is None:
-            continue
-        part_col = next((c for c in ("pb", "ph") if c in src.columns),
-                        None)
-        if part_col is not None:
-            # preserve the hash-bucketed layout (and the in-file key
-            # sort) through compaction — probes prune the same way
-            # before and after; sort key matches the table's writer
-            # (bands: bhash; embedding buckets: tbl, bkt; hashes: _id)
-            sort_cols = [c for c in ("bhash", "tbl", "bkt")
-                         if c in src.columns] if part_col == "pb" \
-                else ["_id"]
-            (src.drop("epoch")
-             .repartition(target_partitions, part_col)
-             .sortWithinPartitions(*sort_cols)
-             .write.mode("overwrite").partitionBy(part_col)
-             .parquet(f"{tmp}/{table}"))
-        else:
-            (src.drop("epoch").repartition(target_partitions)
-             .write.mode("overwrite").parquet(f"{tmp}/{table}"))
+        if src is not None:
+            src.repartition(n_files).write.mode("overwrite") \
+                .parquet(f"{tmp}/{table}")
     # the _SUCCESS of this one-row write IS the commit point: before
     # it, recovery rolls back; after it, recovery rolls forward
     from ..plans.checkpoint import rows_df
@@ -1210,19 +1034,15 @@ def compact_epoch_store(spark, store_dir: str, tables: tuple[str, ...],
     return True
 
 
-def compact_band_store(spark, store_dir: str, upto: int,
-                       target_partitions: int | None = None) -> bool:
+def compact_band_store(spark, store_dir: str, upto: int) -> bool:
     """:func:`compact_epoch_store` over the MinHash band store's two
     tables (bands, hashes)."""
-    return compact_epoch_store(spark, store_dir, ("bands", "hashes"),
-                               upto, target_partitions)
+    return compact_epoch_store(spark, store_dir, ("bands", "hashes"), upto)
 
 
-def compact_embedding_store(spark, store_dir: str, upto: int,
-                            target_partitions: int | None = None) -> bool:
+def compact_embedding_store(spark, store_dir: str, upto: int) -> bool:
     """:func:`compact_epoch_store` over the embedding bucket store."""
-    return compact_epoch_store(spark, store_dir, ("buckets",),
-                               upto, target_partitions)
+    return compact_epoch_store(spark, store_dir, ("buckets",), upto)
 
 
 # ---------------------------------------------------------------------------
@@ -1439,18 +1259,12 @@ def _emb_bucket_rows(df: DataFrame, id_col: str, emb_col: str,
 def write_embedding_store(df: DataFrame, store_dir: str, epoch: int,
                           id_col: str, emb_col: str, n_bits: int = 12,
                           n_tables: int = 4, seed: int = 42,
-                          dim: int | None = None,
-                          pb_buckets: int = 256) -> None:
+                          dim: int | None = None) -> None:
     """Append one epoch's survivors' LSH bucket ids to the embedding
-    store ({store_dir}/buckets/epoch=N + a one-row meta pinning
-    (n_bits, n_tables, seed, dim, pb_buckets) so every later
+    store ({store_dir}/buckets/epoch=N, one plain parquet dir, + a
+    one-row meta pinning (n_bits, n_tables, seed, dim) so every later
     write/probe hashes into the identical bucket space).  NULL
-    embeddings carry no similarity evidence and are not stored.
-
-    ``pb_buckets`` sub-partitions the buckets table by
-    ``pmod(xxhash64(tbl, bkt), pb_buckets)`` — the band store's probe
-    pruning layout, mirrored: probes read only the batch's touched
-    ``pb=`` dirs by explicit path."""
+    embeddings carry no similarity evidence and are not stored."""
     from ..plans.checkpoint import fs_exists
     from .similarity import hyperplanes
 
@@ -1475,13 +1289,6 @@ def write_embedding_store(df: DataFrame, store_dir: str, epoch: int,
                 f"embedding store at {store_dir} pinned dim={m['dim']}, "
                 f"write requested dim={dim}")
         dim = m["dim"]
-        stored_pb = m.get("pb_buckets", 0) or 0
-        if stored_pb != pb_buckets:
-            raise ValueError(
-                f"embedding store at {store_dir} is laid out with "
-                f"pb_buckets={stored_pb}, write requested {pb_buckets} "
-                f"— appending a different sub-partition layout would "
-                f"break probe-side pruning")
     else:
         if dim is None:
             probe = df.select(emb_col).first()
@@ -1491,23 +1298,12 @@ def write_embedding_store(df: DataFrame, store_dir: str, epoch: int,
         from ..plans.checkpoint import write_rows
         write_rows(
             spark, meta_path,
-            "n_bits int, n_tables int, seed int, dim int, pb_buckets int",
-            [(n_bits, n_tables, seed, dim, pb_buckets)])
+            "n_bits int, n_tables int, seed int, dim int",
+            [(n_bits, n_tables, seed, dim)])
     planes = [hyperplanes(dim, n_bits, seed + t) for t in range(n_tables)]
     rows = _emb_bucket_rows(df, id_col, emb_col, planes, dim, n_bits,
                             n_tables)
-    if pb_buckets > 0:
-        n_tasks = max(1, min(pb_buckets,
-                             spark.sparkContext.defaultParallelism))
-        (rows.withColumn("pb", F.pmod(F.xxhash64("tbl", "bkt"),
-                                      F.lit(pb_buckets)).cast("int"))
-         .repartition(n_tasks, "pb")
-         .sortWithinPartitions("pb", "tbl", "bkt")
-         .write.mode("overwrite").partitionBy("pb")
-         .parquet(f"{store_dir}/buckets/epoch={epoch}"))
-    else:
-        rows.write.mode("overwrite").parquet(
-            f"{store_dir}/buckets/epoch={epoch}")
+    rows.write.mode("overwrite").parquet(f"{store_dir}/buckets/epoch={epoch}")
     # see write_band_store: invalidate cached parent-path scans
     spark.catalog.refreshByPath(store_dir)
 
@@ -1544,21 +1340,7 @@ def embedding_dups_against_store(new: DataFrame, ref: DataFrame,
                              n_tables)
             .select(F.col("_id").alias("id_new"), "tbl", "bkt")
             .persist(StorageLevel.MEMORY_AND_DISK))
-    store_pb = m.get("pb_buckets", 0) or 0
-    if store_pb > 0:
-        # explicit-path pruning, mirroring cross_dup_pairs_stored:
-        # listing and bytes read scale with the batch's touched set
-        touched_pb = {r[0] for r in
-                      newb.select(F.pmod(F.xxhash64("tbl", "bkt"),
-                                         F.lit(store_pb))
-                                  .cast("int").alias("pb"))
-                      .distinct().collect()}
-        store = _read_epochs(spark, f"{store_dir}/buckets", max_epoch,
-                             subdirs={f"pb={p}" for p in touched_pb})
-        if store is not None:
-            store = store.drop("pb")
-    else:
-        store = _read_epochs(spark, f"{store_dir}/buckets", max_epoch)
+    store = _read_epochs(spark, f"{store_dir}/buckets", max_epoch)
     if store is None:
         id_type = dict(new.dtypes)[id_col]
         return spark.createDataFrame(

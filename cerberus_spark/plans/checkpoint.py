@@ -202,16 +202,16 @@ def write_rows(spark: SparkSession, path: str, schema: str,
 
 @contextmanager
 def sequential_listing(spark: SparkSession, path: str):
-    """Force parquet partition discovery under ``path`` to list
+    """Force parquet file listing under ``path`` to run
     sequentially on the driver while the context is open — ONLY when
     the path's filesystem is local.  Spark switches to a distributed
     listing job above ``spark.sql.sources.parallelPartitionDiscovery.
     threshold`` (default 32) paths, which is right for high-latency
     object stores but costs a whole job's scheduling overhead to list
-    a few hundred local dirs (measured 0.42 s vs 0.05 s for a 256-dir
-    bucketed store table).  Not thread-safe: flips a session-level SQL
-    conf for the duration (single-threaded probe/compaction paths
-    only)."""
+    local dirs (measured 0.42 s vs 0.05 s for 256 local dirs) — an
+    uncompacted epoch store with more than 32 epoch dirs is listed
+    sequentially.  Not thread-safe: flips a session-level SQL conf for
+    the duration (single-threaded probe/compaction paths only)."""
     if _local_dir(spark, path) is None:
         yield
         return

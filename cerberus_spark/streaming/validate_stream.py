@@ -443,8 +443,8 @@ def corpus_ingest_foreach_batch(
       scan of the store, where the r4/r5 design
       (``dedup_against(batch, whole_kept_corpus)``) re-tokenized
       everything kept so far every epoch: total ingest compute
-      quadratic in stream length.  State lives on disk as bucketable
-      parquet, never in executor memory.
+      quadratic in stream length.  State lives on disk as one plain
+      parquet dir per table and epoch, never in executor memory.
     * Idempotent: each epoch overwrites exactly its own partitions
       (corpus, band store, stats).
     * ``record_stats`` writes a one-row funnel per epoch
@@ -485,9 +485,7 @@ def corpus_ingest_foreach_batch(
     corpus_path = f"{out_dir}/corpus"
     store_dir = f"{out_dir}/band_store"
     kw = dict(dedup_kw or {})
-    store_kw = {p: kw[p] for p in ("k", "num_perm", "bands",
-                                   "band_buckets", "hash_buckets")
-                if p in kw}
+    store_kw = {p: kw[p] for p in ("k", "num_perm", "bands") if p in kw}
     probe_kw = {p: kw[p]
                 for p in ("k", "num_perm", "bands", "bucket_cap",
                           "persist_shingles") if p in kw}
@@ -591,20 +589,9 @@ def corpus_ingest_foreach_batch(
             f"{corpus_path}/epoch={epoch_id}")
         if dedup_threshold is not None:
             # commit the survivors' bands/hashes so later epochs probe
-            # the store instead of re-shingling the kept corpus.  The
-            # ingest is the trickle-batch regime the id-bucketed hashes
-            # layout exists for (the probe's exact-verify read prunes
-            # to the dirs holding candidate ref ids instead of scanning
-            # the whole corpus' shingle hashes every epoch), so NEW
-            # stores default to hash_buckets=64; an existing store's
-            # pinned layout always wins (resume never restates it), and
-            # dedup_kw['hash_buckets'] overrides either way.
-            skw = store_kw
-            if "hash_buckets" not in skw \
-                    and not fs_exists(spark, f"{store_dir}/meta"):
-                skw = {**store_kw, "hash_buckets": 64}
+            # the store instead of re-shingling the kept corpus
             write_band_store(kept.select(id_col, text_col), store_dir,
-                             epoch_id, id_col, text_col, **skw)
+                             epoch_id, id_col, text_col, **store_kw)
             if (compact_every and epoch_id > 0
                     and epoch_id % compact_every == 0):
                 compact_band_store(spark, store_dir, upto=int(epoch_id))

@@ -321,19 +321,13 @@ def test_compact_recovery_rolls_forward_committed(spark, tmp_path):
     new = spark.createDataFrame(_NEW, "doc_id long, text string")
     before = _stored_pairs(spark, store, new)
 
-    # phase 1 by hand (mirroring compact_epoch_store's writes, incl.
-    # the pb sub-layout of the bands table): full tmp + committed
-    # marker, no finalize
+    # phase 1 by hand (mirroring compact_epoch_store's writes): full
+    # tmp + committed marker, no finalize
     upto = 2
     for table in ("bands", "hashes"):
-        src = (spark.read.parquet(f"{store}/{table}")
-               .filter(F.col("epoch") < upto).drop("epoch"))
-        if "pb" in src.columns:
-            (src.repartition(4, "pb").sortWithinPartitions("bhash")
-             .write.partitionBy("pb")
-             .parquet(f"{store}/_compact_tmp/{table}"))
-        else:
-            src.write.parquet(f"{store}/_compact_tmp/{table}")
+        (spark.read.parquet(f"{store}/{table}")
+         .filter(F.col("epoch") < upto).drop("epoch")
+         .write.parquet(f"{store}/_compact_tmp/{table}"))
     spark.createDataFrame([(upto,)], "upto int") \
         .coalesce(1).write.parquet(f"{store}/_compact")
     # simulate a crash midway through phase 2: bands already swapped
@@ -400,95 +394,6 @@ def test_store_probe_sees_epochs_appended_after_prior_probe(spark, tmp_path):
         == {(10, 1), (11, 99)}
 
 
-# ---------------------------------------------------------------------------
-# bhash-bucketed bands layout (r7): probe-side partition pruning
-# ---------------------------------------------------------------------------
-
-
-def test_band_store_bucketed_layout_and_meta_pin(spark, tmp_path):
-    import os
-    store = _write_ref_store(spark, tmp_path, [_REF], band_buckets=8)
-    meta = spark.read.parquet(f"{store}/meta").first()
-    assert meta["band_buckets"] == 8
-    # on-disk layout: pb= subdirs under the epoch
-    subs = sorted(d for d in os.listdir(f"{store}/bands/epoch=0")
-                  if d.startswith("pb="))
-    assert subs and all(0 <= int(d.split("=")[1]) < 8 for d in subs)
-    # appending a conflicting layout is rejected (probe pruning would
-    # silently miss rows otherwise)
-    df = spark.createDataFrame(_REF, "doc_id long, text string")
-    with pytest.raises(ValueError, match="band_buckets"):
-        D.write_band_store(df, store, 1, "doc_id", "text", band_buckets=16)
-
-
-def test_band_store_probe_prunes_to_touched_pb_dirs(spark, tmp_path):
-    """The probe's store read lists a STRICT subset of the bands files
-    when the batch touches a strict subset of pb dirs — the r6 verdict
-    acceptance — and pairs are identical to the flat layout."""
-    import os
-    rng = random.Random(431)
-    vocab = [f"w{i}" for i in range(40)]
-    ref_rows = [(i, " ".join(rng.choices(vocab, k=15))) for i in range(60)]
-    new_rows = [(100, ref_rows[3][1] + " extra")]  # tiny batch: 1 doc
-
-    flat = _write_ref_store(spark, tmp_path / "flat", [ref_rows],
-                            band_buckets=0)
-    buck = _write_ref_store(spark, tmp_path / "buck", [ref_rows],
-                            band_buckets=64)
-    new = spark.createDataFrame(new_rows, "doc_id long, text string")
-
-    # a 1-doc batch has ≤ 8 band keys -> ≤ 8 of the 64 pb dirs touched;
-    # pruning is by EXPLICIT PATHS, so the probe's input-file set is a
-    # strict subset of the store's band files (the r6 verdict
-    # acceptance shape).  Introspect BEFORE any cached probe of the
-    # same store: a persisted candidate frame from an earlier identical
-    # plan would be cache-substituted into this one and hide the store
-    # scan from inputFiles() — same files read either way, this order
-    # keeps the plan introspectable (persist_shingles=False likewise).
-    pairs_nocache = D.cross_dup_pairs_stored(
-        new, buck, "doc_id", "text", threshold=0.5,
-        persist_shingles=False)
-    band_files = [f for f in pairs_nocache.inputFiles()
-                  if "/bands/" in f]
-    touched_dirs = {f.split("/pb=")[1].split("/")[0] for f in band_files}
-    n_dirs = len([d for d in os.listdir(f"{buck}/bands/epoch=0")
-                  if d.startswith("pb=")])
-    assert band_files and len(touched_dirs) <= 8 < n_dirs
-
-    want = {(r.id_new, r.id_ref, round(r.jaccard, 12))
-            for r in D.cross_dup_pairs_stored(
-                new, flat, "doc_id", "text", threshold=0.5).collect()}
-    pairs = D.cross_dup_pairs_stored(new, buck, "doc_id", "text",
-                                     threshold=0.5)
-    got = {(r.id_new, r.id_ref, round(r.jaccard, 12))
-           for r in pairs.collect()}
-    assert got == want and got  # identical, non-empty
-
-
-def test_band_store_bucketed_compaction_preserves_layout(spark, tmp_path):
-    import os
-    rng = random.Random(77)
-    vocab = [f"w{i}" for i in range(30)]
-    epochs = [[(e * 100 + i,
-                " ".join(rng.choices(vocab, k=rng.randrange(6, 20))))
-               for i in range(10)] for e in range(3)]
-    store = _write_ref_store(spark, tmp_path, epochs, band_buckets=16)
-    new = spark.createDataFrame(
-        [(999, epochs[1][2][1] + " tail")], "doc_id long, text string")
-    before = {(r.id_new, r.id_ref, round(r.jaccard, 12))
-              for r in D.cross_dup_pairs_stored(
-                  new, store, "doc_id", "text", threshold=0.5).collect()}
-    assert D.compact_band_store(spark, store, upto=3) is True
-    # compacted partition kept the pb sub-layout
-    subs = [d for d in os.listdir(f"{store}/bands/epoch=2")
-            if d.startswith("pb=")]
-    assert subs
-    after = {(r.id_new, r.id_ref, round(r.jaccard, 12))
-             for r in D.cross_dup_pairs_stored(
-                 new, store, "doc_id", "text", threshold=0.5).collect()}
-    assert after == before
-
-
 def test_band_store_probe_pinned_lifecycle(spark, tmp_path):
     store = _write_ref_store(spark, tmp_path, [_REF])
     new = spark.createDataFrame(_NEW, "doc_id long, text string")
@@ -505,134 +410,6 @@ def test_band_store_probe_pinned_lifecycle(spark, tmp_path):
         for p in pinned:
             p.unpersist()
     assert n_cached() == base
-
-
-def test_embedding_store_pb_layout_prunes_and_matches_flat(spark,
-                                                           tmp_path):
-    import os
-    rng = random.Random(53)
-    dim = 12
-    ref_rows = [(i, v) for i, v in enumerate(_vecs(rng, 40, dim))]
-    new_rows = [(900, [x + rng.gauss(0, 0.005) for x in ref_rows[7][1]])]
-    ref = spark.createDataFrame(ref_rows, "vec_id long, emb array<double>")
-    new = spark.createDataFrame(new_rows, "vec_id long, emb array<double>")
-    flat = str(tmp_path / "emb_flat")
-    buck = str(tmp_path / "emb_buck")
-    D.write_embedding_store(ref, flat, 0, "vec_id", "emb",
-                            n_bits=6, n_tables=4, pb_buckets=0)
-    D.write_embedding_store(ref, buck, 0, "vec_id", "emb",
-                            n_bits=6, n_tables=4, pb_buckets=64)
-    assert spark.read.parquet(f"{buck}/meta").first()["pb_buckets"] == 64
-    subs = [d for d in os.listdir(f"{buck}/buckets/epoch=0")
-            if d.startswith("pb=")]
-    assert subs
-
-    def probe(store):
-        return {(r.id_new, r.id_ref, round(r.cosine, 9))
-                for r in D.embedding_dups_against_store(
-                    new, ref, store, "vec_id", "emb",
-                    threshold=0.98).collect()}
-
-    want = probe(flat)
-    got_df = D.embedding_dups_against_store(new, ref, buck, "vec_id",
-                                            "emb", threshold=0.98)
-    got = {(r.id_new, r.id_ref, round(r.cosine, 9))
-           for r in got_df.collect()}
-    assert got == want and got
-    # 1 new vector -> <= 4 table buckets -> <= 4 touched pb dirs; the
-    # probe's input-file set is a strict subset of the store's files
-    bfiles = [f for f in got_df.inputFiles() if "/buckets/" in f]
-    touched = {f.split("/pb=")[1].split("/")[0] for f in bfiles}
-    assert bfiles and len(touched) <= 4 < len(subs)
-    # mismatched layout append rejected
-    with pytest.raises(ValueError, match="pb_buckets"):
-        D.write_embedding_store(ref, buck, 1, "vec_id", "emb",
-                                n_bits=6, n_tables=4, pb_buckets=32)
-
-
-def test_hashes_ph_layout_meta_pin_and_append_adopts(spark, tmp_path):
-    """hash_buckets pins the id-bucketed HASHES layout in meta; a
-    default (None) append ADOPTS the pinned layout — bucketed or
-    legacy-flat — and only an explicitly conflicting value raises."""
-    import os
-    store = _write_ref_store(spark, tmp_path, [_REF[:2]], hash_buckets=8)
-    meta = spark.read.parquet(f"{store}/meta").first()
-    assert meta["hash_buckets"] == 8 and meta["band_buckets"] == 256
-    subs = sorted(d for d in os.listdir(f"{store}/hashes/epoch=0")
-                  if d.startswith("ph="))
-    assert subs and all(0 <= int(d.split("=")[1]) < 8 for d in subs)
-    df = spark.createDataFrame(_REF[2:], "doc_id long, text string")
-    # default append adopts the pinned layout (the resume contract)
-    D.write_band_store(df, store, 1, "doc_id", "text")
-    assert any(d.startswith("ph=")
-               for d in os.listdir(f"{store}/hashes/epoch=1"))
-    with pytest.raises(ValueError, match="hash_buckets"):
-        D.write_band_store(df, store, 2, "doc_id", "text",
-                           hash_buckets=16)
-    # legacy-flat stores resume on default args too (r7 ADVICE: an
-    # explicit-only layout broke ingest resume on pre-layout stores)
-    flat = _write_ref_store(spark, tmp_path / "flat", [_REF[:2]],
-                            band_buckets=0)
-    D.write_band_store(df, flat, 1, "doc_id", "text")
-    assert not any(d.startswith("pb=")
-                   for d in os.listdir(f"{flat}/bands/epoch=1"))
-
-
-def test_probe_verify_prunes_to_touched_ph_dirs(spark, tmp_path):
-    """With the id-bucketed hashes layout the exact-verify READ lists a
-    strict subset of the hashes files (the dirs holding candidate ref
-    ids) — and pairs are identical to the flat layout."""
-    import os
-    rng = random.Random(919)
-    vocab = [f"w{i}" for i in range(40)]
-    ref_rows = [(i, " ".join(rng.choices(vocab, k=15))) for i in range(60)]
-    new_rows = [(100, ref_rows[3][1] + " extra")]  # tiny batch: 1 doc
-
-    flat = _write_ref_store(spark, tmp_path / "flat", [ref_rows],
-                            hash_buckets=0)
-    buck = _write_ref_store(spark, tmp_path / "buck", [ref_rows],
-                            hash_buckets=64)
-    new = spark.createDataFrame(new_rows, "doc_id long, text string")
-
-    pairs_nocache = D.cross_dup_pairs_stored(
-        new, buck, "doc_id", "text", threshold=0.5,
-        persist_shingles=False)
-    hfiles = [f for f in pairs_nocache.inputFiles() if "/hashes/" in f]
-    touched = {f.split("/ph=")[1].split("/")[0] for f in hfiles}
-    n_dirs = len([d for d in os.listdir(f"{buck}/hashes/epoch=0")
-                  if d.startswith("ph=")])
-    # 1 candidate new doc pairs with few ref ids -> few of 64 ph dirs
-    assert hfiles and len(touched) < n_dirs
-
-    want = {(r.id_new, r.id_ref, round(r.jaccard, 12))
-            for r in D.cross_dup_pairs_stored(
-                new, flat, "doc_id", "text", threshold=0.5).collect()}
-    got = {(r.id_new, r.id_ref, round(r.jaccard, 12))
-           for r in pairs_nocache.collect()}
-    assert got == want and got
-
-
-def test_hashes_ph_compaction_preserves_layout(spark, tmp_path):
-    import os
-    rng = random.Random(177)
-    vocab = [f"w{i}" for i in range(30)]
-    epochs = [[(e * 100 + i,
-                " ".join(rng.choices(vocab, k=rng.randrange(6, 20))))
-               for i in range(10)] for e in range(3)]
-    store = _write_ref_store(spark, tmp_path, epochs, hash_buckets=8)
-    new = spark.createDataFrame(
-        [(999, epochs[1][2][1] + " tail")], "doc_id long, text string")
-    before = {(r.id_new, r.id_ref, round(r.jaccard, 12))
-              for r in D.cross_dup_pairs_stored(
-                  new, store, "doc_id", "text", threshold=0.5).collect()}
-    assert D.compact_band_store(spark, store, upto=3) is True
-    subs = [d for d in os.listdir(f"{store}/hashes/epoch=2")
-            if d.startswith("ph=")]
-    assert subs
-    after = {(r.id_new, r.id_ref, round(r.jaccard, 12))
-             for r in D.cross_dup_pairs_stored(
-                 new, store, "doc_id", "text", threshold=0.5).collect()}
-    assert after == before
 
 
 def test_bucket_cap_guard_fallback_matches_recompute(spark, tmp_path):
@@ -655,3 +432,156 @@ def test_bucket_cap_guard_fallback_matches_recompute(spark, tmp_path):
                                              "text", threshold=0.9,
                                              bucket_cap=4).collect()}
     assert got == want and got
+
+
+# ---------------------------------------------------------------------------
+# one flat layout per store table
+# ---------------------------------------------------------------------------
+
+
+def _parquet_files(root):
+    """Every parquet file under ``root`` (bucket sub-dirs included)
+    and the name of every directory below it."""
+    import os
+
+    files, dirs = [], []
+    for d, subs, names in os.walk(root):
+        dirs += subs
+        files += [os.path.join(d, n) for n in names
+                  if n.endswith(".parquet")]
+    return files, dirs
+
+
+def test_small_epoch_writes_few_flat_files(spark, tmp_path):
+    """One small ingest epoch writes at most 4 parquet files per store
+    table (the test session's parallelism) and no bucket sub-dirs: the
+    bands and hashes through the corpus ingest, the embedding buckets
+    through write_embedding_store."""
+    from cerberus_spark.streaming.validate_stream import (
+        corpus_ingest_foreach_batch,
+    )
+
+    rng = random.Random(17)
+    vocab = [f"w{i}" for i in range(200)]
+    out = str(tmp_path / "out")
+    cb = corpus_ingest_foreach_batch(
+        out, id_col="doc_id", text_col="text", dedup_threshold=0.6,
+        record_stats=False)
+    cb(spark.createDataFrame(
+        [(f"d{i}", " ".join(rng.choices(vocab, k=20))) for i in range(40)],
+        "doc_id string, text string"), 0)
+    emb = str(tmp_path / "emb_store")
+    D.write_embedding_store(
+        spark.createDataFrame(list(enumerate(_vecs(rng, 40, 8))),
+                              "vec_id long, emb array<double>"),
+        emb, 0, "vec_id", "emb", n_bits=6, n_tables=4)
+
+    for table in (f"{out}/band_store/bands", f"{out}/band_store/hashes",
+                  f"{emb}/buckets"):
+        files, dirs = _parquet_files(f"{table}/epoch=0")
+        assert 1 <= len(files) <= 4, (table, len(files))
+        assert dirs == [], (table, dirs)
+
+
+def _old_layout_epoch(spark, src_table, dst_table, col, bucket):
+    """Rewrite a flat epoch dir in the bucket-dir layout older writers
+    used (``partitionBy(col)`` on a hash bucket of the row)."""
+    (spark.read.parquet(src_table).withColumn(col, bucket)
+     .write.partitionBy(col).parquet(dst_table))
+
+
+def test_band_store_mixed_layout_reads_and_compacts(spark, tmp_path):
+    """A store whose epoch 0 was written in the old bucket-dir layout
+    (``pb=`` bands, ``ph=`` hashes, meta carrying the layout columns)
+    and whose epoch 1 comes from the current writer probes to the same
+    pairs as an all-flat store; compaction leaves no bucket dirs."""
+    from cerberus_spark.plans.checkpoint import write_rows
+
+    rng = random.Random(23)
+    vocab = [f"w{i}" for i in range(40)]
+    epochs = [[(e * 100 + i, " ".join(rng.choices(vocab, k=15)))
+               for i in range(12)] for e in range(2)]
+    flat = _write_ref_store(spark, tmp_path / "flat", epochs)
+    mixed = str(tmp_path / "mixed")
+    _old_layout_epoch(spark, f"{flat}/bands/epoch=0",
+                      f"{mixed}/bands/epoch=0", "pb",
+                      F.pmod(F.col("bhash"), F.lit(16)).cast("int"))
+    _old_layout_epoch(spark, f"{flat}/hashes/epoch=0",
+                      f"{mixed}/hashes/epoch=0", "ph",
+                      F.pmod(F.xxhash64("_id"), F.lit(8)).cast("int"))
+    write_rows(spark, f"{mixed}/meta",
+               "k int, num_perm int, bands int, band_buckets int, "
+               "hash_buckets int", [(3, 32, 8, 16, 8)])
+    D.write_band_store(
+        spark.createDataFrame(epochs[1], "doc_id long, text string"),
+        mixed, 1, "doc_id", "text")
+    assert any(d.startswith("pb=")
+               for d in _parquet_files(f"{mixed}/bands/epoch=0")[1])
+    assert _parquet_files(f"{mixed}/bands/epoch=1")[1] == []
+
+    new = spark.createDataFrame(
+        [(900, epochs[0][3][1] + " extra"), (901, epochs[1][5][1] + " x")],
+        "doc_id long, text string")
+
+    def pairs(store, **kw):
+        return {(r.id_new, r.id_ref, round(r.jaccard, 12))
+                for r in D.cross_dup_pairs_stored(
+                    new, store, "doc_id", "text", threshold=0.5,
+                    **kw).collect()}
+
+    want = pairs(flat)
+    assert {(a, b) for a, b, _ in want} >= {(900, 3), (901, 105)}
+    assert pairs(mixed) == want
+    assert pairs(mixed, max_epoch=1) == pairs(flat, max_epoch=1)
+
+    assert D.compact_band_store(spark, mixed, upto=2) is True
+    for table in ("bands", "hashes"):
+        assert _parquet_files(f"{mixed}/{table}")[1] == ["epoch=1"]
+    assert pairs(mixed) == want
+
+
+def test_embedding_store_mixed_layout_reads_and_compacts(spark, tmp_path):
+    """The embedding-store twin: an old ``pb=`` epoch (meta carrying
+    ``pb_buckets``) beside a current-writer epoch probes like an
+    all-flat store, and compaction leaves no bucket dirs."""
+    from cerberus_spark.plans.checkpoint import write_rows
+
+    rng = random.Random(29)
+    dim = 12
+    ref_rows = list(enumerate(_vecs(rng, 16, dim)))
+    new_rows = [(200 + t, [x + rng.gauss(0, 0.01) for x in ref_rows[t][1]])
+                for t in (1, 9)]
+    ddl = "vec_id long, emb array<double>"
+    ref = spark.createDataFrame(ref_rows, ddl)
+    new = spark.createDataFrame(new_rows, ddl)
+    halves = [ref_rows[:8], ref_rows[8:]]
+    flat = str(tmp_path / "flat")
+    for epoch, rows in enumerate(halves):
+        D.write_embedding_store(spark.createDataFrame(rows, ddl), flat,
+                                epoch, "vec_id", "emb", n_bits=8,
+                                n_tables=8)
+    mixed = str(tmp_path / "mixed")
+    _old_layout_epoch(spark, f"{flat}/buckets/epoch=0",
+                      f"{mixed}/buckets/epoch=0", "pb",
+                      F.pmod(F.xxhash64("tbl", "bkt"), F.lit(16))
+                      .cast("int"))
+    write_rows(spark, f"{mixed}/meta",
+               "n_bits int, n_tables int, seed int, dim int, pb_buckets int",
+               [(8, 8, 42, dim, 16)])
+    D.write_embedding_store(spark.createDataFrame(halves[1], ddl), mixed, 1,
+                            "vec_id", "emb", n_bits=8, n_tables=8)
+    assert any(d.startswith("pb=")
+               for d in _parquet_files(f"{mixed}/buckets/epoch=0")[1])
+
+    def pairs(store):
+        return {(r.id_new, r.id_ref, round(r.cosine, 9))
+                for r in D.embedding_dups_against_store(
+                    new, ref, store, "vec_id", "emb",
+                    threshold=0.98).collect()}
+
+    want = pairs(flat)
+    assert {(a, b) for a, b, _ in want} >= {(201, 1), (209, 9)}
+    assert pairs(mixed) == want
+    assert D.compact_embedding_store(spark, mixed, upto=2) is True
+    assert _parquet_files(f"{mixed}/buckets")[1] == ["epoch=1"]
+    assert pairs(mixed) == want
